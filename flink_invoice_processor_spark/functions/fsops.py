@@ -36,7 +36,12 @@ def list_partition_values(
     ``key=N`` dir).  Every caller here treats a listed-but-empty batch
     exactly like an empty DataFrame slice — it contributes no rows to
     the fold and its dir is retired by the same sweep — so the substitution
-    is behavior-preserving even in crash-debris states."""
+    is behavior-preserving even in crash-debris states.
+
+    Directory names whose value is not an integer (Hive's
+    ``key=__HIVE_DEFAULT_PARTITION__`` for null keys, a writer's leftover
+    ``key=0.tmp``) name no batch id; they are skipped instead of aborting
+    the caller's compaction."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(pattern)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -47,7 +52,10 @@ def list_partition_values(
         for status in statuses:
             name = status.getPath().getName()
             if name.startswith(prefix):
-                vals.add(int(name[len(prefix):]))
+                try:
+                    vals.add(int(name[len(prefix):]))
+                except ValueError:
+                    pass
     return sorted(vals)
 
 

@@ -73,6 +73,7 @@ from ..config import (
     TAG_UPDATE,
 )
 from ..schemas import RESPONSE_ENVELOPE, RETRY_PAYLOAD_SUPERSET
+from ..streaming.dedup import DEDUP_KEY_COLS
 
 #: Vietnamese success message, verbatim from the reference
 #: (InvoiceResponseItemFactory.java:32).
@@ -81,25 +82,12 @@ SUCCESS_MESSAGE = "Tạo mới thành công"
 RECORD_TYPE_INV_IN = "inv_in"
 RECORD_TYPE_INV_OUT = "inv_out"
 
-#: Dedup-key labels (InvoiceResponseRecordKeyGenerator.java:12,15).
-_KEY_LABEL = {RECORD_TYPE_INV_IN: "InvIn", RECORD_TYPE_INV_OUT: "InvOut"}
-
 
 class ResponseBatchResult(NamedTuple):
     packets: DataFrame  # one row per assembled packet: api_type, batch_seq,
                         # topic, packet_json, item_count
     db_ops: DataFrame   # successful envelope rows → transactional sink
     retry: DataFrame    # RETRY_EMIT_COLUMNS rows → retry-queue sink
-
-
-def record_key(df: DataFrame) -> Column:
-    """Composite dedup key (InvoiceResponseRecordKeyGenerator.java:9-18)."""
-    label = (
-        F.when(F.col("record_type") == RECORD_TYPE_INV_IN, F.lit("InvIn"))
-        .when(F.col("record_type") == RECORD_TYPE_INV_OUT, F.lit("InvOut"))
-        .otherwise(F.concat_ws("_", F.col("sid"), F.col("syncid")))
-    )
-    return F.concat_ws("_", label, F.col("id"), F.col("sid"), F.col("syncid"))
 
 
 def make_response_envelope(inv_in: DataFrame, inv_out: DataFrame) -> DataFrame:
@@ -124,7 +112,7 @@ def dedup_records(df: DataFrame) -> DataFrame:
     (watermark-bounded dropDuplicatesWithinWatermark)
     so state stays bounded (the reference's Set grows forever — a leak we
     deliberately do not copy)."""
-    return df.dropDuplicates(["record_type", "id", "sid", "syncid"])
+    return df.dropDuplicates(DEDUP_KEY_COLS)
 
 
 def build_response_items(df: DataFrame) -> DataFrame:

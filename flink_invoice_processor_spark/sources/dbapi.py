@@ -45,8 +45,13 @@ from ..schemas import ASYNC_INV_IN_RECORD, ASYNC_INV_OUT_RECORD, INVOICE_RETRY_R
 
 ConnFactory = Callable[[], object]
 
-_INV_IN_COLS = [f.name for f in ASYNC_INV_IN_RECORD.fields]
-_INV_OUT_COLS = [f.name for f in ASYNC_INV_OUT_RECORD.fields]
+#: queue table → (schema, ready predicate): the reference's hand-written
+#: WHEREs (AsyncInvInSource.java:55, AsyncInvOutSource.java:55).  Shared
+#: with the ``table_queue`` streaming source.
+QUEUE_TABLES = {
+    "async_inv_in": (ASYNC_INV_IN_RECORD, "res_type = 2 AND state = 4"),
+    "async_inv_out": (ASYNC_INV_OUT_RECORD, "res_type = 2 AND state = 0"),
+}
 _RETRY_COLS = [f.name for f in INVOICE_RETRY_RECORD.fields]
 
 
@@ -70,25 +75,32 @@ def _coerce(rows: list[tuple], schema) -> list[tuple]:
     return out
 
 
-def _fetch(
+def _poll_ready(
     spark: SparkSession,
     conn_factory: ConnFactory,
-    sql: str,
-    params: tuple,
-    columns: list[str],
-    schema,
-) -> tuple[DataFrame, list[tuple]]:
+    table: str,
+    cfg: EngineConfig | None,
+    last_id: int,
+    dialect: Dialect,
+) -> tuple[DataFrame, int]:
+    """One poll of a queue table's ready rows past the id high-water mark:
+    ``WHERE <ready> AND id > ? ORDER BY id ASC LIMIT fetchSize``."""
+    cfg = cfg or EngineConfig()
+    schema, ready = QUEUE_TABLES[table]
+    sql = (
+        f"SELECT {', '.join(f.name for f in schema.fields)} FROM {table} "
+        f"WHERE {ready} AND id > {dialect.placeholder} "
+        f"ORDER BY id ASC LIMIT {cfg.mysql_fetch_size}"
+    )
     conn = conn_factory()
     try:
         cur = conn.cursor()
-        cur.execute(sql, params)
+        cur.execute(sql, (last_id,))
         rows = cur.fetchall()
     finally:
         conn.close()
-    df = spark.createDataFrame(_coerce(rows, schema), schema) if rows else (
-        spark.createDataFrame([], schema)
-    )
-    return df, rows
+    df = spark.createDataFrame(_coerce(rows, schema), schema)
+    return df, max((r[0] for r in rows), default=last_id)
 
 
 def poll_async_inv_in(
@@ -103,17 +115,7 @@ def poll_async_inv_in(
     Returns ``(rows, new_last_id)``; the caller persists ``new_last_id``
     as the stream offset.
     """
-    cfg = cfg or EngineConfig()
-    sql = (
-        f"SELECT {', '.join(_INV_IN_COLS)} FROM async_inv_in "
-        f"WHERE res_type = 2 AND state = 4 AND id > {dialect.placeholder} "
-        f"ORDER BY id ASC LIMIT {cfg.mysql_fetch_size}"
-    )
-    df, rows = _fetch(
-        spark, conn_factory, sql, (last_id,), _INV_IN_COLS, ASYNC_INV_IN_RECORD
-    )
-    new_last = max((r[0] for r in rows), default=last_id)
-    return df, new_last
+    return _poll_ready(spark, conn_factory, "async_inv_in", cfg, last_id, dialect)
 
 
 def poll_async_inv_out(
@@ -125,17 +127,7 @@ def poll_async_inv_out(
 ) -> tuple[DataFrame, int]:
     """One poll of ``async_inv_out`` (predicate ``res_type=2 AND state=0``,
     ``AsyncInvOutSource.java:55``)."""
-    cfg = cfg or EngineConfig()
-    sql = (
-        f"SELECT {', '.join(_INV_OUT_COLS)} FROM async_inv_out "
-        f"WHERE res_type = 2 AND state = 0 AND id > {dialect.placeholder} "
-        f"ORDER BY id ASC LIMIT {cfg.mysql_fetch_size}"
-    )
-    df, rows = _fetch(
-        spark, conn_factory, sql, (last_id,), _INV_OUT_COLS, ASYNC_INV_OUT_RECORD
-    )
-    new_last = max((r[0] for r in rows), default=last_id)
-    return df, new_last
+    return _poll_ready(spark, conn_factory, "async_inv_out", cfg, last_id, dialect)
 
 
 def claim_retry_batch(
@@ -247,8 +239,6 @@ def claim_retry_batch(
         raise
     else:
         conn.close()
-    if not claimed:
-        return spark.createDataFrame([], INVOICE_RETRY_RECORD)
     return spark.createDataFrame(
         _coerce(claimed, INVOICE_RETRY_RECORD), INVOICE_RETRY_RECORD
     )

@@ -55,18 +55,11 @@ from typing import Iterator, Tuple
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from ..schemas import ASYNC_INV_IN_RECORD, ASYNC_INV_OUT_RECORD
-
-#: table → (schema, ready-predicate) — the reference's hand-written WHEREs
-#: (AsyncInvInSource.java:55, AsyncInvOutSource.java:55).
-_TABLES = {
-    "async_inv_in": (ASYNC_INV_IN_RECORD, "res_type = 2 AND state = 4"),
-    "async_inv_out": (ASYNC_INV_OUT_RECORD, "res_type = 2 AND state = 0"),
-}
+from .dbapi import QUEUE_TABLES, _coerce
 
 
 def queue_table_schema(table: str) -> StructType:
-    return _TABLES[table][0]
+    return QUEUE_TABLES[table][0]
 
 
 class TableQueueStreamReader(SimpleDataSourceStreamReader):
@@ -90,16 +83,11 @@ class TableQueueStreamReader(SimpleDataSourceStreamReader):
         else:
             raise ValueError(f"unknown backend: {self.backend!r}")
         self.table = options.get("table", "async_inv_in")
-        if self.table not in _TABLES:
+        if self.table not in QUEUE_TABLES:
             raise ValueError(f"unknown queue table: {self.table!r}")
-        self.schema, self.predicate = _TABLES[self.table]
+        self.schema, self.predicate = QUEUE_TABLES[self.table]
         self.fetch_size = int(options.get("fetch_size", "2000"))
         self.columns = [f.name for f in self.schema.fields]
-        self._ts_idx = [
-            i
-            for i, f in enumerate(self.schema.fields)
-            if f.dataType.typeName() == "timestamp"
-        ]
 
     def _connect(self):
         if self._factory is not None:
@@ -125,18 +113,7 @@ class TableQueueStreamReader(SimpleDataSourceStreamReader):
                 cur.close()
         finally:
             conn.close()
-        if self._ts_idx:
-            from datetime import datetime
-
-            fixed = []
-            for r in rows:
-                r = list(r)
-                for i in self._ts_idx:
-                    if isinstance(r[i], str):
-                        r[i] = datetime.fromisoformat(r[i])
-                fixed.append(tuple(r))
-            rows = fixed
-        return rows
+        return _coerce(rows, self.schema)
 
     def initialOffset(self) -> dict:
         return {"last_id": 0}

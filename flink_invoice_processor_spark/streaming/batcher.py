@@ -23,9 +23,7 @@ with ``to_json(struct(*cols))`` and parse flushed batches back with
 
 Scale notes: state is one buffer per key (the reference's key domain is the
 five api_types, so state is tiny and there is exactly one shuffle, on the
-key — same topology as the reference's ``keyBy``).  For unbounded key
-domains pass ``remove_state_when_empty=True`` so drained keys free their
-state instead of parking an empty buffer + seq counter forever.  Unlike the
+key — same topology as the reference's ``keyBy``).  Unlike the
 reference's dedup set (which leaks, ``:29`` — see SURVEY §2.4 K3), state
 here is bounded by ``batch_size`` rows per key by construction.
 """
@@ -76,7 +74,6 @@ def _make_batch_fn(
     batch_size: int,
     timeout_ms: int,
     max_wait_ms: int | None,
-    remove_state_when_empty: bool,
 ):
     def fn(
         key: Tuple[Any, ...],
@@ -122,14 +119,11 @@ def _make_batch_fn(
                 buffer = buffer[batch_size:]
                 last_flush = now_ms
 
-        if not buffer and remove_state_when_empty:
-            state.remove()
-        else:
-            state.update((buffer, last_flush, seq + len(flushed)))
-            if buffer:
-                # re-arm: timers are one-shot and cleared on every
-                # invocation (InvoiceResponseTimerManager.java:27-57)
-                state.setTimeoutDuration(timeout_ms)
+        state.update((buffer, last_flush, seq + len(flushed)))
+        if buffer:
+            # re-arm: timers are one-shot and cleared on every
+            # invocation (InvoiceResponseTimerManager.java:27-57)
+            state.setTimeoutDuration(timeout_ms)
 
         if flushed:
             yield pd.DataFrame(
@@ -151,21 +145,19 @@ def count_or_timeout_batches(
     batch_size: int = 100,
     timeout_ms: int = 3000,
     max_wait_ms: int | None = 6000,
-    payload_col: str = "payload",
-    remove_state_when_empty: bool = False,
 ) -> DataFrame:
     """Group a (streaming) DataFrame by ``key_cols`` and emit one row per
     flushed batch, with the count/timeout/max-wait protocol above.
 
-    ``df`` must carry the serialized record in ``payload_col``
-    (string); everything else except the keys is ignored.  Output schema is
+    ``df`` must carry the serialized record in a ``payload`` string
+    column; everything else except the keys is ignored.  Output schema is
     :data:`BATCH_OUTPUT_SCHEMA`; ``key`` is the ``_``-joined key values
     (the reference keys on the single ``api_type`` byte,
     ``job/InvoiceResponse.java:98-118``).
     """
-    sel = df.select(*key_cols, df[payload_col].alias("payload"))
+    sel = df.select(*key_cols, "payload")
     return sel.groupBy(*key_cols).applyInPandasWithState(
-        _make_batch_fn(batch_size, timeout_ms, max_wait_ms, remove_state_when_empty),
+        _make_batch_fn(batch_size, timeout_ms, max_wait_ms),
         outputStructType=BATCH_OUTPUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",

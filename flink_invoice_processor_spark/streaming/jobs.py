@@ -13,6 +13,12 @@
   (``InvoiceResponseBatchProcessor.java:205-218`` — at-least-once with
   downstream dedup, not atomic).
 
+The response job has two entry points, the ``response_cycle`` driver loop
+and the ``run_invoice_response_stream_job`` Structured Streaming query.
+Both build an envelope and hand it to ``respond``, the one response
+micro-batch body: claim RESPONSE retries → transform → process → packet
+sink → log-and-delete → retry emissions.
+
 Both jobs run as **micro-batch loops**: the streaming query's trigger (or
 the driver loop's poll interval) plays the role of the reference's
 processing-time timers; the batch envelope's count cap is enforced inside
@@ -49,31 +55,30 @@ from ..sources.dbapi import (
 )
 from .kafka import kafka_request_stream
 
+#: The stream job's cross-batch dedup horizon, measured from first arrival.
+DEDUP_DELAY = "10 minutes"
+
 
 def request_micro_batch(
     packets_df: DataFrame,
     spark: SparkSession,
     cfg: EngineConfig,
     conn_factory: ConnFactory,
-    claim_retries: bool = True,
 ) -> None:
     """One micro-batch of the request job: new packets + claimed retry rows
     → insert valid records, enqueue failures.  Usable directly as the body
     of ``foreachBatch``."""
     valid, retry = parse_request_packets(packets_df, cfg)
-    if claim_retries:
-        # the reap lease revives claims orphaned by an epoch that died
-        # between its claim commit and its sink (the replayed epoch
-        # cannot re-claim them itself — the flip already committed)
-        claimed = claim_retry_batch(
-            spark, conn_factory, RETRY_JOB_REQUEST, cfg,
-            reap_processing_after_s=cfg.processing_lease_s,
-        )
-        r_valid, r_retry = transform_retry_records(claimed, cfg)
-        valid = valid.unionByName(r_valid)
-        retry = retry.unionByName(r_retry)
-    write_invoice_records(valid, conn_factory, cfg)
-    write_retry_emissions(retry, conn_factory, cfg)
+    # the reap lease revives claims orphaned by an epoch that died
+    # between its claim commit and its sink (the replayed epoch
+    # cannot re-claim them itself — the flip already committed)
+    claimed = claim_retry_batch(
+        spark, conn_factory, RETRY_JOB_REQUEST, cfg,
+        reap_processing_after_s=cfg.processing_lease_s,
+    )
+    r_valid, r_retry = transform_retry_records(claimed, cfg)
+    write_invoice_records(valid.unionByName(r_valid), conn_factory, cfg)
+    write_retry_emissions(retry.unionByName(r_retry), conn_factory, cfg)
 
 
 def run_invoice_request_job(
@@ -98,6 +103,36 @@ def run_invoice_request_job(
     )
 
 
+def respond(
+    spark: SparkSession,
+    envelope: DataFrame,
+    cfg: EngineConfig,
+    conn_factory: ConnFactory,
+    packet_sink: Callable[[DataFrame], None],
+    lease_s: int,
+) -> None:
+    """The response job's one micro-batch body: claim due RESPONSE retries
+    and union the recovered rows into ``envelope``, process, then sink.
+
+    ``lease_s`` is the claim's reap lease: a prior batch that died after
+    its claim committed but before its sinks ran leaves rows in
+    PROCESSING, where no later claim can see them; the reap revives them
+    once the lease expires.
+    """
+    claimed = claim_retry_batch(
+        spark, conn_factory, RETRY_JOB_RESPONSE, cfg,
+        reap_processing_after_s=lease_s,
+    )
+    recovered, retry_emits = transform_response_retry_records(claimed, cfg)
+    result = process_response_batch(envelope.unionByName(recovered), cfg)
+
+    # Step 1: Kafka first, Step 2: DB transaction — the reference's ordering
+    # (InvoiceResponseBatchProcessor.java:205-218)
+    packet_sink(result.packets)
+    write_log_and_delete(result.db_ops, conn_factory, cfg)
+    write_retry_emissions(result.retry.unionByName(retry_emits), conn_factory, cfg)
+
+
 def response_cycle(
     spark: SparkSession,
     cfg: EngineConfig,
@@ -105,7 +140,6 @@ def response_cycle(
     packet_sink: Callable[[DataFrame], None],
     last_in_id: int = 0,
     last_out_id: int = 0,
-    claim_retries: bool = True,
 ) -> tuple[int, int]:
     """One poll-process-sink cycle of the response job; returns the advanced
     (inv_in, inv_out) high-water marks.  The driver loop calls this every
@@ -117,24 +151,7 @@ def response_cycle(
     inv_in, last_in_id = poll_async_inv_in(spark, conn_factory, cfg, last_in_id)
     inv_out, last_out_id = poll_async_inv_out(spark, conn_factory, cfg, last_out_id)
     envelope = make_response_envelope(inv_in, inv_out)
-
-    retry_emits = None
-    if claim_retries:
-        claimed = claim_retry_batch(
-            spark, conn_factory, RETRY_JOB_RESPONSE, cfg,
-            reap_processing_after_s=cfg.processing_lease_s,
-        )
-        recovered, retry_emits = transform_response_retry_records(claimed, cfg)
-        envelope = envelope.unionByName(recovered)
-
-    result = process_response_batch(envelope, cfg)
-
-    # Step 1: Kafka first, Step 2: DB transaction — the reference's ordering
-    # (InvoiceResponseBatchProcessor.java:205-218)
-    packet_sink(result.packets)
-    write_log_and_delete(result.db_ops, conn_factory, cfg)
-    retry = result.retry if retry_emits is None else result.retry.unionByName(retry_emits)
-    write_retry_emissions(retry, conn_factory, cfg)
+    respond(spark, envelope, cfg, conn_factory, packet_sink, cfg.processing_lease_s)
     return last_in_id, last_out_id
 
 
@@ -146,7 +163,6 @@ def run_invoice_response_stream_job(
     packet_sink: Callable[[DataFrame], None],
     checkpoint_dir: str,
     trigger_ms: int | None = None,
-    dedup_delay: str = "10 minutes",
 ):
     """The response job as ONE Structured Streaming query: both queue
     tables via the ``table_queue`` streaming source (offsets in the
@@ -160,11 +176,7 @@ def run_invoice_response_stream_job(
     reference's batch-timeout role (``InvoiceResponseBatchProcessor
     .java:56``).  Returns the started ``StreamingQuery``.
     """
-    from ..operators.response import (
-        RECORD_TYPE_INV_IN,
-        RECORD_TYPE_INV_OUT,
-        make_response_envelope,
-    )
+    from ..operators.response import make_response_envelope
     from ..sources.stream import TableQueueDataSource
     from .dedup import streaming_dedup
 
@@ -188,11 +200,11 @@ def run_invoice_response_stream_job(
     # them "late", silently drop them, and the source offset (already
     # advanced) would never re-read them.  The per-micro-batch timestamp
     # is monotone, so nothing is ever late, state stays bounded by the
-    # same delay, and the dedup horizon becomes "within `dedup_delay` of
+    # same delay, and the dedup horizon becomes "within `DEDUP_DELAY` of
     # first ARRIVAL" — which is also closer to the reference's
     # memory-lifetime dedup set than created_date ever was.
     envelope = envelope.withColumn("_arrival_ts", F.current_timestamp())
-    deduped = streaming_dedup(envelope, "_arrival_ts", dedup_delay).drop(
+    deduped = streaming_dedup(envelope, "_arrival_ts", DEDUP_DELAY).drop(
         "_arrival_ts"
     )
 
@@ -204,30 +216,10 @@ def run_invoice_response_stream_job(
     lease_s = max(cfg.processing_lease_s, 10 * trigger_ms // 1000)
 
     def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # claim + revive due RESPONSE retries each batch, exactly like the
-        # driver-loop `response_cycle` — without this, retry rows the
-        # stream job itself enqueues would sit PENDING forever in a
-        # stream-only deployment
-        spark_b = batch_df.sparkSession
-        # lease-swept claim: if a prior epoch died after its claim
-        # committed but before the sinks ran, its rows sit in PROCESSING
-        # where the replayed epoch cannot re-claim them — the reap
-        # revives them once the lease (10 trigger beats) expires
-        claimed = claim_retry_batch(
-            spark_b, conn_factory, RETRY_JOB_RESPONSE, cfg,
-            reap_processing_after_s=lease_s,
-        )
-        recovered, retry_emits = transform_response_retry_records(
-            claimed, cfg
-        )
-        batch = batch_df.unionByName(recovered)
-        result = process_response_batch(batch, cfg)
-        # Step 1 Kafka, Step 2 DB transaction — the reference's ordering
-        packet_sink(result.packets)
-        write_log_and_delete(result.db_ops, conn_factory, cfg)
-        write_retry_emissions(
-            result.retry.unionByName(retry_emits), conn_factory, cfg
-        )
+        # claims due RESPONSE retries each batch, like `response_cycle`:
+        # without it, retry rows this job enqueues would sit PENDING
+        # forever in a stream-only deployment
+        respond(batch_df.sparkSession, batch_df, cfg, conn_factory, packet_sink, lease_s)
 
     return (
         deduped.writeStream.foreachBatch(on_batch)

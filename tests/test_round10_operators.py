@@ -266,6 +266,19 @@ class TestFsops:
             spark, str(base / "bucket=*" / "batch=3")
         ) == 0
 
+    def test_list_partition_values_skips_non_integer_names(self, spark, tmp_path):
+        from flink_invoice_processor_spark.functions.fsops import (
+            list_partition_values,
+        )
+
+        base = tmp_path / "store"
+        for name in ("batch=2", "batch=0", "batch=__HIVE_DEFAULT_PARTITION__", "batch=0.tmp"):
+            (base / "bucket=0" / name).mkdir(parents=True)
+        (base / "bucket=1" / "batch=2").mkdir(parents=True)
+        assert list_partition_values(
+            spark, str(base / "bucket=*" / "batch=*"), "batch"
+        ) == [0, 2]
+
 
 class TestReviewFixes:
     """Round-8 adversarial review: edge cases the oracle can't see."""
