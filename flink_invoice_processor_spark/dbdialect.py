@@ -1,11 +1,11 @@
-"""SQL dialects for the DBAPI sinks/sources.
+"""SQL dialects and connection factories for the DBAPI sinks/sources.
 
 The reference speaks MySQL only — its retry DML computes the backoff
 timestamp **server-side** (``sink/InvoiceRetrySink.java:33,36``:
 ``next_retry_time = CURRENT_TIMESTAMP + INTERVAL ? SECOND``) and its
-JDBC driver uses qmark parameters.  This container has no MySQL server,
-so tests run on SQLite — but the production DML must still be the
-reference's, so each sink asks a :class:`Dialect` to render its SQL:
+JDBC driver uses qmark parameters.  Tests run on SQLite, but the
+production DML must still be the reference's, so each sink and source
+asks a :class:`Dialect` to render its SQL:
 
 - :data:`SQLITE` — qmark placeholders, **client-side** backoff (the
   absolute ``next_retry_time`` is computed in the writer and bound as a
@@ -15,6 +15,12 @@ reference's, so each sink asks a :class:`Dialect` to render its SQL:
   ``CURRENT_TIMESTAMP + INTERVAL %s SECOND`` expression, so clock skew
   between Spark executors and the database never shifts the schedule.
 
+The connection factory names its dialect: every :class:`ConnFactory`
+carries a ``dialect`` attribute (``SqliteConnFactory.dialect`` is
+:data:`SQLITE`, :attr:`MySQLConnFactory.dialect` is :data:`MYSQL`), and
+the sinks and sources read it from the factory they are handed, so the
+SQL always matches the backend the connections come from.
+
 Semantics are identical: a row becomes ready ``delay`` seconds from the
 write.  The only observable difference is whose clock defines "now", and
 the MySQL path deliberately matches the reference (DB clock).
@@ -23,6 +29,8 @@ the MySQL path deliberately matches the reference (DB clock).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import datetime, timezone
+from typing import Any, Protocol
 
 
 @dataclass(frozen=True)
@@ -94,6 +102,21 @@ MYSQL = Dialect(name="mysql", placeholder="%s", server_side_interval=True)
 DIALECTS = {d.name: d for d in (SQLITE, MYSQL)}
 
 
+class ConnFactory(Protocol):
+    """Picklable zero-arg callable returning a DBAPI connection, tagged
+    with the dialect its connections speak.  Executors call it to open
+    their own connections."""
+
+    dialect: Dialect
+
+    def __call__(self) -> Any: ...
+
+
+def utcnow() -> datetime:
+    """The client clock as naive UTC (the clock of client-side dialects)."""
+    return datetime.now(timezone.utc).replace(tzinfo=None)
+
+
 class MySQLConnFactory:
     """Picklable MySQL connection factory (production twin of
     ``SqliteConnFactory``).  Import-gated: neither PyMySQL nor
@@ -101,6 +124,8 @@ class MySQLConnFactory:
     only stores parameters) and ``__call__`` raises ``ImportError`` with a
     clear message if no driver is installed on the executors.
     """
+
+    dialect = MYSQL
 
     def __init__(self, host: str, user: str, password: str, database: str,
                  port: int = 3306):

@@ -64,22 +64,80 @@ from ..config import (
 )
 from ..schemas import INVOICE_MYSQL_RECORD
 
-#: Columns of a retry-queue emission (pre-sink; ``next_retry_delay_s`` is a
-#: relative delay the sink turns into ``CURRENT_TIMESTAMP + INTERVAL ? SECOND``,
-#: mirroring sink/InvoiceRetrySink.java:36).
+#: Columns of a retry-queue emission, in the order both functions below emit
+#: them (pre-sink; ``next_retry_delay_s`` is a relative delay the sink turns
+#: into ``CURRENT_TIMESTAMP + INTERVAL ? SECOND``, InvoiceRetrySink.java:36).
 RETRY_EMIT_COLUMNS = [
-    "tag",
-    "queue_id",
-    "sid",
-    "syncid",
-    "job",
-    "payload",
-    "error_message",
-    "error_code",
-    "retry_count",
-    "state",
-    "next_retry_delay_s",
+    "tag", "queue_id", "sid", "syncid", "job", "payload", "error_message",
+    "error_code", "retry_count", "state", "next_retry_delay_s",
 ]
+
+
+def retry_create_rows(
+    df: DataFrame,
+    job: str,
+    cfg: EngineConfig,
+    sid: Column,
+    syncid: Column,
+    payload: Column,
+) -> DataFrame:
+    """CREATE retry rows for fresh failures (``_error_message`` /
+    ``_error_code`` set): count 0, PENDING, one base interval's delay
+    (transform :47, ``InvoiceResponseBatchProcessor.java:194-202``)."""
+    cols = {
+        "tag": F.lit(TAG_CREATE),
+        "queue_id": F.lit(None).cast("long"),
+        "sid": sid,
+        "syncid": syncid,
+        "job": F.lit(job),
+        "payload": payload,
+        "error_message": F.col("_error_message"),
+        "error_code": F.col("_error_code"),
+        "retry_count": F.lit(0).cast("byte"),
+        "state": F.lit(RETRY_STATE_PENDING),
+        "next_retry_delay_s": F.lit(cfg.app_retry_interval_ms // 1000).cast("long"),
+    }
+    return df.select(*[cols[c].alias(c) for c in RETRY_EMIT_COLUMNS])
+
+
+def retry_outcome_rows(
+    claimed: DataFrame,
+    cfg: EngineConfig,
+    error_code: Column,
+    error_message: Column,
+) -> DataFrame:
+    """The retry-queue state machine for re-processed claimed rows
+    (reference :113-136, ``InvoiceResponseBatchProcessor.java:276-316``):
+    count > app.max.retries ⇒ MAX_RETRY; no error ⇒ DELETE; otherwise
+    UPDATE with the new error, count + 1 and a ``base_s * 2^new_count``
+    backoff (the *incremented* count, reference :128 then :132)."""
+    base_s = cfg.app_retry_interval_ms // 1000
+    new_count = (F.col("retry_count") + 1).cast("byte")
+    tag = (
+        F.when(F.col("retry_count") > cfg.app_max_retries, F.lit(TAG_MAX_RETRY))
+        .when(error_code.isNull(), F.lit(TAG_DELETE))
+        .otherwise(F.lit(TAG_UPDATE))
+    )
+    update = tag == TAG_UPDATE
+    cols = {
+        "tag": tag,
+        "queue_id": F.col("id"),
+        "sid": F.col("sid"),
+        "syncid": F.col("syncid"),
+        "job": F.col("job"),
+        "payload": F.col("payload"),
+        "error_message": F.when(update, error_message).otherwise(F.col("error_message")),
+        "error_code": F.when(update, error_code).otherwise(F.col("error_code")),
+        "retry_count": F.when(update, new_count).otherwise(
+            F.col("retry_count").cast("byte")
+        ),
+        "state": F.lit(RETRY_STATE_PENDING),
+        "next_retry_delay_s": F.when(
+            update,
+            (F.lit(base_s) * F.pow(F.lit(2.0), new_count.cast("double"))).cast("long"),
+        ).otherwise(F.lit(None).cast("long")),
+    }
+    return claimed.select(*[cols[c].alias(c) for c in RETRY_EMIT_COLUMNS])
 
 
 class RequestSplit(NamedTuple):
@@ -220,21 +278,9 @@ def parse_request_packets(
 
     ok = F.col("_error_code").isNull()
     valid = derived.where(ok).select(*[f.name for f in INVOICE_MYSQL_RECORD.fields])
-    retry = derived.where(~ok).select(
-        F.lit(TAG_CREATE).alias("tag"),
-        F.lit(None).cast("long").alias("queue_id"),
-        F.col("_retry_sid").alias("sid"),
-        F.col("_retry_syncid").alias("syncid"),
-        F.lit(RETRY_JOB_REQUEST).alias("job"),
-        F.col("elem").alias("payload"),
-        F.col("_error_message").alias("error_message"),
-        F.col("_error_code").alias("error_code"),
-        F.lit(0).cast("byte").alias("retry_count"),
-        F.lit(RETRY_STATE_PENDING).alias("state"),
-        # fresh failures wait one base interval (transform :47)
-        F.lit(cfg.app_retry_interval_ms // 1000).cast("long").alias(
-            "next_retry_delay_s"
-        ),
+    retry = retry_create_rows(
+        derived.where(~ok), RETRY_JOB_REQUEST, cfg,
+        sid=F.col("_retry_sid"), syncid=F.col("_retry_syncid"), payload=F.col("elem"),
     )
     return RequestSplit(valid=valid, retry=retry)
 
@@ -259,8 +305,6 @@ def transform_retry_records(
       MAX_RETRY rows (count > app.max.retries) for the dead-letter path.
     """
     cfg = cfg or EngineConfig()
-    base_s = cfg.app_retry_interval_ms // 1000
-
     over = F.col("retry_count") > cfg.app_max_retries
     payload_v = F.try_parse_json(F.col("payload"))
     cols = _derived_columns(
@@ -290,35 +334,7 @@ def transform_retry_records(
         ]
     )
 
-    new_count = (F.col("retry_count") + 1).cast("byte")
-    tag = (
-        F.when(over, F.lit(TAG_MAX_RETRY))
-        .when(F.col("_d__error_code").isNull(), F.lit(TAG_DELETE))
-        .otherwise(F.lit(TAG_UPDATE))
-    )
-    retry = derived.select(
-        tag.alias("tag"),
-        F.col("id").alias("queue_id"),
-        F.col("sid"),
-        F.col("syncid"),
-        F.col("job"),
-        F.col("payload"),
-        F.when(tag == TAG_UPDATE, F.col("_d__error_message"))
-        .otherwise(F.col("error_message"))
-        .alias("error_message"),
-        F.when(tag == TAG_UPDATE, F.col("_d__error_code"))
-        .otherwise(F.col("error_code"))
-        .alias("error_code"),
-        F.when(tag == TAG_UPDATE, new_count)
-        .otherwise(F.col("retry_count").cast("byte"))
-        .alias("retry_count"),
-        F.lit(RETRY_STATE_PENDING).alias("state"),
-        # backoff uses the *incremented* count (reference :128 then :132)
-        F.when(
-            tag == TAG_UPDATE,
-            (F.lit(base_s) * F.pow(F.lit(2.0), new_count.cast("double"))).cast("long"),
-        )
-        .otherwise(F.lit(None).cast("long"))
-        .alias("next_retry_delay_s"),
+    retry = retry_outcome_rows(
+        derived, cfg, F.col("_d__error_code"), F.col("_d__error_message")
     )
     return RequestSplit(valid=valid, retry=retry)

@@ -62,18 +62,10 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..config import (
-    API_TYPES,
-    EngineConfig,
-    RETRY_JOB_RESPONSE,
-    RETRY_STATE_PENDING,
-    TAG_CREATE,
-    TAG_DELETE,
-    TAG_MAX_RETRY,
-    TAG_UPDATE,
-)
+from ..config import API_TYPES, EngineConfig, RETRY_JOB_RESPONSE
 from ..schemas import RESPONSE_ENVELOPE, RETRY_PAYLOAD_SUPERSET
 from ..streaming.dedup import DEDUP_KEY_COLS
+from .request import retry_create_rows, retry_outcome_rows
 
 #: Vietnamese success message, verbatim from the reference
 #: (InvoiceResponseItemFactory.java:32).
@@ -260,20 +252,9 @@ def _validation_retry_rows(df: DataFrame, cfg: EngineConfig) -> DataFrame:
         F.col("record_type") == RECORD_TYPE_INV_IN, payload_struct(in_payload_cols)
     ).otherwise(payload_struct(out_payload_cols))
 
-    return df.select(
-        F.lit(TAG_CREATE).alias("tag"),
-        F.lit(None).cast("long").alias("queue_id"),
-        F.col("sid"),
-        F.col("syncid"),
-        F.lit(RETRY_JOB_RESPONSE).alias("job"),
-        payload.alias("payload"),
-        F.col("_error_message").alias("error_message"),
-        F.col("_error_code").alias("error_code"),
-        F.lit(0).cast("byte").alias("retry_count"),
-        F.lit(RETRY_STATE_PENDING).alias("state"),
-        F.lit(cfg.app_retry_interval_ms // 1000).cast("long").alias(
-            "next_retry_delay_s"
-        ),
+    return retry_create_rows(
+        df, RETRY_JOB_RESPONSE, cfg,
+        sid=F.col("sid"), syncid=F.col("syncid"), payload=payload,
     )
 
 
@@ -319,8 +300,6 @@ def transform_response_retry_records(
     exhaustion dead-letters via MAX_RETRY.
     """
     cfg = cfg or EngineConfig()
-    base_s = cfg.app_retry_interval_ms // 1000
-
     over = F.col("retry_count") > cfg.app_max_retries
     keys = F.json_object_keys(F.col("payload"))
     parse_ok = keys.isNotNull()
@@ -390,34 +369,5 @@ def transform_response_retry_records(
             env_cols.append(F.col("_p")[f.name].cast(f.dataType).alias(f.name))
     recovered = derived.where(ok).select(env_cols)
 
-    new_count = (F.col("retry_count") + 1).cast("byte")
-    tag = (
-        F.when(over, F.lit(TAG_MAX_RETRY))
-        .when(F.col("_ec").isNull(), F.lit(TAG_DELETE))
-        .otherwise(F.lit(TAG_UPDATE))
-    )
-    retry = derived.select(
-        tag.alias("tag"),
-        F.col("id").alias("queue_id"),
-        F.col("sid"),
-        F.col("syncid"),
-        F.col("job"),
-        F.col("payload"),
-        F.when(tag == TAG_UPDATE, F.col("_em")).otherwise(F.col("error_message")).alias(
-            "error_message"
-        ),
-        F.when(tag == TAG_UPDATE, F.col("_ec")).otherwise(F.col("error_code")).alias(
-            "error_code"
-        ),
-        F.when(tag == TAG_UPDATE, new_count)
-        .otherwise(F.col("retry_count").cast("byte"))
-        .alias("retry_count"),
-        F.lit(RETRY_STATE_PENDING).alias("state"),
-        F.when(
-            tag == TAG_UPDATE,
-            (F.lit(base_s) * F.pow(F.lit(2.0), new_count.cast("double"))).cast("long"),
-        )
-        .otherwise(F.lit(None).cast("long"))
-        .alias("next_retry_delay_s"),
-    )
+    retry = retry_outcome_rows(derived, cfg, F.col("_ec"), F.col("_em"))
     return ResponseRetrySplit(recovered=recovered, retry=retry)

@@ -44,30 +44,6 @@ INVOICE_MYSQL_RECORD = T.StructType(
     ]
 )
 
-#: Nested ``inv`` node inside a request packet element.  Only the fields the
-#: engine inspects are typed; the full element body is carried as raw JSON in
-#: parallel (reference re-serializes the element verbatim,
-#: process/request/InvoiceRequestTransformer.java:91).
-_INV_NODE = T.StructType(
-    [
-        T.StructField("stax", T.StringType(), True),
-        T.StructField("sid", T.StringType(), True),
-        T.StructField("syncid", T.StringType(), True),
-    ]
-)
-
-#: One element of a request packet's ``inv_pack`` array.
-#: Reference: field probes in process/request/InvoiceRequestTransformer.java:55-96.
-REQUEST_ELEMENT = T.StructType(
-    [
-        T.StructField("api_type", T.ByteType(), True),
-        T.StructField("sid", T.StringType(), True),
-        T.StructField("syncid", T.StringType(), True),
-        T.StructField("stax", T.StringType(), True),
-        T.StructField("inv", _INV_NODE, True),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Response side
 # ---------------------------------------------------------------------------
@@ -129,23 +105,6 @@ RESPONSE_ENVELOPE = T.StructType(
     ]
 )
 
-#: One item of a response packet (``inv_pack_res`` element).
-#: Reference: model/response/InvoiceResponsePacket.java:7-23 +
-#: process/response/InvoiceResponseItemFactory.java:25-66.
-RESPONSE_ITEM = T.StructType(
-    [
-        T.StructField("sid", T.StringType(), True),
-        T.StructField("sync_sid", T.StringType(), True),
-        T.StructField("message", T.StringType(), True),
-        T.StructField("status", T.StringType(), True),
-        T.StructField("code", T.StringType(), True),
-        T.StructField("res_code", T.StringType(), True),
-        T.StructField("res_resource", T.StringType(), True),
-        T.StructField("data", T.VariantType(), True),  # parsed JSON tree,
-        # embedded as a nested object when the packet is serialized
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Retry subsystem
 # ---------------------------------------------------------------------------
@@ -167,20 +126,6 @@ INVOICE_RETRY_RECORD = T.StructType(
         T.StructField("next_retry_time", T.TimestampType(), True),
         T.StructField("created_at", T.TimestampType(), True),
         T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)
-
-#: Dead-letter row.  Reference: model/InvoiceErrorLogRecord.java:5-14 +
-#: sink/InvoiceRetrySink.java:42,115-124.
-INVOICE_ERROR_LOG_RECORD = T.StructType(
-    [
-        T.StructField("payload", T.StringType(), True),
-        T.StructField("error_message", T.StringType(), True),
-        T.StructField("error_code", T.StringType(), True),
-        T.StructField("attempt", T.ByteType(), True),
-        T.StructField("sid", T.StringType(), True),
-        T.StructField("syncid", T.StringType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
     ]
 )
 

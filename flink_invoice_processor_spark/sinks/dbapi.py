@@ -10,17 +10,18 @@ function usable standalone (batch) or inside ``foreachBatch`` (streaming):
 - W4 transactional log-and-delete
   (``sink/TransactionalLogAndDeleteSink.java:26-183``).
 
-Portability: SQL is rendered per-:class:`~..dbdialect.Dialect`.  The
-default :data:`~..dbdialect.SQLITE` dialect computes the absolute
+Portability: SQL is rendered in the dialect the connection factory names
+(``conn_factory.dialect``, see :mod:`~..dbdialect`).  The
+:data:`~..dbdialect.SQLITE` dialect computes the absolute
 ``next_retry_time`` executor-side and binds it as a plain timestamp
 parameter (SQLite has no ``INTERVAL``); the :data:`~..dbdialect.MYSQL`
 dialect emits the reference's exact server-side DML
 (``CURRENT_TIMESTAMP + INTERVAL %s SECOND``,
 ``sink/InvoiceRetrySink.java:33,36``) with ``%s`` parameters, binding the
-delay seconds instead.  ``conn_factory`` must be a picklable zero-arg
-callable returning a DBAPI connection — executors open their own
-connections (``SqliteConnFactory`` here, ``dbdialect.MySQLConnFactory``
-for production).
+delay seconds instead.  ``conn_factory`` must be a picklable
+:class:`~..dbdialect.ConnFactory` — executors open their own connections
+(``SqliteConnFactory`` here, ``dbdialect.MySQLConnFactory`` for
+production).
 
 Delivery semantics: all three writers are idempotent-or-conditioned the
 same way the reference is — inserts are append-only logs, UPDATE/DELETE are
@@ -28,36 +29,38 @@ conditioned on ``state='PROCESSING'`` (the claim marker), and log-and-delete
 deletes by primary key — so micro-batch replay after failure yields the
 reference's at-least-once behavior with downstream dedup.
 
-Deliberate upgrade: the reference opens one transaction *per record* in the
-retry sink (``InvoiceRetrySink.java:47-77``); here each partition commits one
-transaction per tag-group batch — same observable rows, fewer round trips
-(the difference at 100 TB between a sink and a bottleneck).
+One transaction per partition for all three writers: a writer only maps
+its rows to ``(sql, params-list)`` statements, and :func:`_write_partitions`
+runs them with ``executemany`` in ``mysql.batch.size`` chunks and commits
+once, retrying the whole transaction after a rollback.  So a partition is
+written all or nothing, as in the reference's
+``TransactionalLogAndDeleteSink``; the reference's retry sink opens one
+transaction *per record* (``InvoiceRetrySink.java:47-77``) — same
+observable rows, fewer round trips.
 """
 
 from __future__ import annotations
 
 import time
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame
 
-from ..config import (
-    EngineConfig,
-    TAG_CREATE,
-    TAG_DELETE,
-    TAG_MAX_RETRY,
-    TAG_UPDATE,
-)
-from ..dbdialect import Dialect, SQLITE
+from ..config import EngineConfig, TAG_CREATE, TAG_DELETE, TAG_MAX_RETRY, TAG_UPDATE
+from ..dbdialect import SQLITE, ConnFactory, utcnow
+from ..schemas import ASYNC_INV_SUCC_LOG_RECORD, INVOICE_MYSQL_RECORD
 
-ConnFactory = Callable[[], object]
+#: ``(sql, params-list)`` pairs one partition's transaction runs in order.
+Statements = list[tuple[str, list[tuple]]]
 
 
 class SqliteConnFactory:
     """Picklable SQLite connection factory (tests / local stand-in for the
     reference's MySQL).  A class instead of a closure so executors resolve
     it by import, not by value."""
+
+    dialect = SQLITE
 
     def __init__(self, path: str, timeout: float = 30.0):
         self.path = path
@@ -68,26 +71,12 @@ class SqliteConnFactory:
 
         return sqlite3.connect(self.path, timeout=self.timeout)
 
-#: Insert column list for async_inv_in — mirrors the reference's 18-column
-#: INSERT (job/InvoiceRequest.java:111-116).
-INVOICE_INSERT_COLUMNS = [
-    "tax_schema", "inv", "api_type", "res_type",
-    "fpt_einvoice_res_code", "fpt_einvoice_res_msg", "fpt_einvoice_res_json",
-    "retry", "state", "group_id", "created_date", "updated_date",
-    "callback_res_code", "callback_res_msg", "callback_res_json",
-    "sid", "syncid", "process_kafka",
-]
 
-SUCC_LOG_COLUMNS = [
-    "tax_schema", "api_type", "res_type", "fpt_einvoice_res_code",
-    "fpt_einvoice_res_msg", "retry", "group_id", "created_date",
-    "updated_date", "callback_res_code", "callback_res_msg", "sid",
-    "syncid", "gdt_res",
-]
+#: Insert column list for async_inv_in — the reference's 18-column INSERT
+#: (job/InvoiceRequest.java:111-116).
+INVOICE_INSERT_COLUMNS = [f.name for f in INVOICE_MYSQL_RECORD.fields]
 
-
-def _utcnow() -> datetime:
-    return datetime.now(timezone.utc).replace(tzinfo=None)
+SUCC_LOG_COLUMNS = [f.name for f in ASYNC_INV_SUCC_LOG_RECORD.fields]
 
 
 def _with_retries(fn: Callable[[], None], conn, max_retries: int) -> None:
@@ -110,58 +99,63 @@ def _with_retries(fn: Callable[[], None], conn, max_retries: int) -> None:
             time.sleep(min(attempt, 5))  # linear backoff, capped for tests
 
 
+def _write_partitions(
+    df: DataFrame,
+    conn_factory: ConnFactory,
+    cfg: EngineConfig,
+    statements: Callable[[Iterable], Statements],
+) -> None:
+    """Run ``statements(rows)`` for every partition of ``df`` as one
+    transaction: ``executemany`` in ``mysql.batch.size`` chunks, one
+    commit, rollback-and-retry on error."""
+    batch_size = cfg.mysql_batch_size
+    max_retries = cfg.mysql_max_retries
+
+    def write_partition(rows: Iterable) -> None:
+        stmts = statements(rows)
+        conn = conn_factory()
+        try:
+            cur = conn.cursor()
+
+            def txn() -> None:
+                for sql, params in stmts:
+                    for i in range(0, len(params), batch_size):
+                        cur.executemany(sql, params[i:i + batch_size])
+                conn.commit()
+
+            _with_retries(txn, conn, max_retries)
+        finally:
+            conn.close()
+
+    df.foreachPartition(write_partition)
+
+
 def write_invoice_records(
     df: DataFrame,
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
     table: str = "async_inv_in",
-    dialect: Dialect = SQLITE,
 ) -> None:
     """W1: batched insert of INVOICE_MYSQL_RECORD rows.
 
-    Distributed: each partition opens its own connection and inserts in
-    ``mysql.batch.size`` chunks (reference batch 2000 / flush 5000 ms /
+    Distributed: each partition inserts its rows in ``mysql.batch.size``
+    chunks inside one transaction (reference batch 2000 / flush 5000 ms /
     3 retries, ``job/InvoiceRequest.java:144-148``; the flush interval is
     the micro-batch trigger in streaming mode).
     """
-    cfg = cfg or EngineConfig()
-    cols = INVOICE_INSERT_COLUMNS
-    sql = dialect.insert_sql(table, cols)
-    batch_size = cfg.mysql_batch_size
-    max_retries = cfg.mysql_max_retries
-
-    def write_partition(rows: Iterable) -> None:
-        conn = conn_factory()
-        try:
-            cur = conn.cursor()
-            chunk: list[tuple] = []
-
-            def flush() -> None:
-                if not chunk:
-                    return
-                _with_retries(
-                    lambda: (cur.executemany(sql, chunk), conn.commit()),
-                    conn,
-                    max_retries,
-                )
-                chunk.clear()
-
-            for row in rows:
-                chunk.append(tuple(row[c] for c in cols))
-                if len(chunk) >= batch_size:
-                    flush()
-            flush()
-        finally:
-            conn.close()
-
-    df.select(INVOICE_INSERT_COLUMNS).foreachPartition(write_partition)
+    sql = conn_factory.dialect.insert_sql(table, INVOICE_INSERT_COLUMNS)
+    _write_partitions(
+        df.select(INVOICE_INSERT_COLUMNS),
+        conn_factory,
+        cfg or EngineConfig(),
+        lambda rows: [(sql, [tuple(r) for r in rows])],
+    )
 
 
 def write_retry_emissions(
     df: DataFrame,
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
-    dialect: Dialect = SQLITE,
     now: datetime | None = None,
 ) -> None:
     """W3: tag-dispatched retry-queue DML (``sink/InvoiceRetrySink.java``).
@@ -175,77 +169,57 @@ def write_retry_emissions(
                   (the reference's off-by-design at ``:119``) + DELETE the
                   queue row in the same transaction (``:115-124``).
 
-    Under a ``server_side_interval`` dialect (MySQL) the bound parameter is
-    the delay in seconds and the DB clock defines "now" — exactly the
-    reference; otherwise the absolute timestamp ``now + delay`` is bound.
+    When the factory's dialect is ``server_side_interval`` (MySQL) the
+    bound parameter is the delay in seconds and the DB clock defines "now"
+    — exactly the reference; otherwise the absolute timestamp
+    ``now + delay`` is bound.
     """
-    cfg = cfg or EngineConfig()
+    dialect = conn_factory.dialect
     insert_sql = dialect.retry_insert_sql()
     update_sql = dialect.retry_update_sql()
     delete_sql = dialect.retry_delete_sql()
     error_sql = dialect.error_log_insert_sql()
     server_side = dialect.server_side_interval
-    max_retries = cfg.mysql_max_retries
-    fixed_now = now
 
-    def write_partition(rows: Iterable) -> None:
-        conn = conn_factory()
-        try:
-            cur = conn.cursor()
-            base = fixed_now or _utcnow()
-            creates, updates, deletes, dead = [], [], [], []
-            for r in rows:
-                delay = r["next_retry_delay_s"]
-                when = (
-                    delay
-                    if server_side
-                    else base + timedelta(seconds=delay)
-                    if delay is not None
-                    else None
+    def statements(rows: Iterable) -> Statements:
+        base = now or utcnow()
+        creates, updates, dead, deletes = [], [], [], []
+        for r in rows:
+            delay = r["next_retry_delay_s"]
+            # a server-side dialect binds the delay, others the absolute time
+            when = delay if server_side or delay is None else base + timedelta(seconds=delay)
+            if r["tag"] == TAG_CREATE:
+                creates.append(
+                    (r["sid"], r["syncid"], r["job"], r["payload"], when,
+                     r["error_message"], r["error_code"])
                 )
-                if r["tag"] == TAG_CREATE:
-                    creates.append(
-                        (r["sid"], r["syncid"], r["job"], r["payload"], when,
-                         r["error_message"], r["error_code"])
-                    )
-                elif r["tag"] == TAG_UPDATE:
-                    updates.append(
-                        (r["error_message"], r["error_code"], when,
-                         r["retry_count"], r["queue_id"])
-                    )
-                elif r["tag"] == TAG_DELETE:
-                    deletes.append((r["queue_id"],))
-                elif r["tag"] == TAG_MAX_RETRY:
-                    dead.append(
-                        ((r["payload"], r["error_message"], r["error_code"],
-                          r["retry_count"] - 1, r["sid"], r["syncid"]),
-                         (r["queue_id"],))
-                    )
+            elif r["tag"] == TAG_UPDATE:
+                updates.append(
+                    (r["error_message"], r["error_code"], when,
+                     r["retry_count"], r["queue_id"])
+                )
+            elif r["tag"] == TAG_DELETE:
+                deletes.append((r["queue_id"],))
+            elif r["tag"] == TAG_MAX_RETRY:
+                dead.append(
+                    (r["payload"], r["error_message"], r["error_code"],
+                     r["retry_count"] - 1, r["sid"], r["syncid"])
+                )
+                deletes.append((r["queue_id"],))
+        return [
+            (insert_sql, creates),
+            (update_sql, updates),
+            (error_sql, dead),
+            (delete_sql, deletes),
+        ]
 
-            def txn() -> None:
-                if creates:
-                    cur.executemany(insert_sql, creates)
-                if updates:
-                    cur.executemany(update_sql, updates)
-                if deletes:
-                    cur.executemany(delete_sql, deletes)
-                for err_params, del_params in dead:
-                    cur.execute(error_sql, err_params)
-                    cur.execute(delete_sql, del_params)
-                conn.commit()
-
-            _with_retries(txn, conn, max_retries)
-        finally:
-            conn.close()
-
-    df.foreachPartition(write_partition)
+    _write_partitions(df, conn_factory, cfg or EngineConfig(), statements)
 
 
 def write_log_and_delete(
     df: DataFrame,
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
-    dialect: Dialect = SQLITE,
     now: datetime | None = None,
 ) -> None:
     """W4: transactional success-log + source-row delete
@@ -257,46 +231,29 @@ def write_log_and_delete(
     ``updated_date`` always NULL, ``:70,125``) and delete the source rows
     by id.  Idempotent under replay because the delete is by primary key.
     """
-    cfg = cfg or EngineConfig()
+    dialect = conn_factory.dialect
     insert_sql = dialect.insert_sql("async_inv_succ_log", SUCC_LOG_COLUMNS)
     delete_in_sql = dialect.delete_by_id_sql("async_inv_in")
     delete_out_sql = dialect.delete_by_id_sql("async_inv_out")
-    max_retries = cfg.mysql_max_retries
-    fixed_now = now
 
-    def write_partition(rows: Iterable) -> None:
-        conn = conn_factory()
-        try:
-            cur = conn.cursor()
-            base = fixed_now or _utcnow()
-            logs, del_in, del_out = [], [], []
-            for r in rows:
-                is_in = r["record_type"] == "inv_in"
-                logs.append(
-                    (
-                        r["tax_schema"], r["api_type"], r["res_type"],
-                        r["fpt_einvoice_res_code"] if is_in else None,
-                        r["fpt_einvoice_res_msg"] if is_in else None,
-                        r["retry"], r["group_id"], base, None,
-                        r["callback_res_code"] if is_in else None,
-                        r["callback_res_msg"] if is_in else None,
-                        r["sid"], r["syncid"],
-                        None if is_in else r["gdt_res"],
-                    )
+    def statements(rows: Iterable) -> Statements:
+        base = now or utcnow()
+        logs, del_in, del_out = [], [], []
+        for r in rows:
+            is_in = r["record_type"] == "inv_in"
+            logs.append(
+                (
+                    r["tax_schema"], r["api_type"], r["res_type"],
+                    r["fpt_einvoice_res_code"] if is_in else None,
+                    r["fpt_einvoice_res_msg"] if is_in else None,
+                    r["retry"], r["group_id"], base, None,
+                    r["callback_res_code"] if is_in else None,
+                    r["callback_res_msg"] if is_in else None,
+                    r["sid"], r["syncid"],
+                    None if is_in else r["gdt_res"],
                 )
-                (del_in if is_in else del_out).append((r["id"],))
+            )
+            (del_in if is_in else del_out).append((r["id"],))
+        return [(insert_sql, logs), (delete_in_sql, del_in), (delete_out_sql, del_out)]
 
-            def txn() -> None:
-                if logs:
-                    cur.executemany(insert_sql, logs)
-                if del_in:
-                    cur.executemany(delete_in_sql, del_in)
-                if del_out:
-                    cur.executemany(delete_out_sql, del_out)
-                conn.commit()
-
-            _with_retries(txn, conn, max_retries)
-        finally:
-            conn.close()
-
-    df.foreachPartition(write_partition)
+    _write_partitions(df, conn_factory, cfg or EngineConfig(), statements)

@@ -34,16 +34,13 @@ instead — that path needs no custom code.
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta, timezone
-from typing import Callable
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig, RETRY_STATE_PENDING, RETRY_STATE_PROCESSING
-from ..dbdialect import Dialect, SQLITE
+from ..dbdialect import ConnFactory, utcnow
 from ..schemas import ASYNC_INV_IN_RECORD, ASYNC_INV_OUT_RECORD, INVOICE_RETRY_RECORD
-
-ConnFactory = Callable[[], object]
 
 #: queue table → (schema, ready predicate): the reference's hand-written
 #: WHEREs (AsyncInvInSource.java:55, AsyncInvOutSource.java:55).  Shared
@@ -55,16 +52,10 @@ QUEUE_TABLES = {
 _RETRY_COLS = [f.name for f in INVOICE_RETRY_RECORD.fields]
 
 
-def _utcnow() -> datetime:
-    return datetime.now(timezone.utc).replace(tzinfo=None)
-
-
 def _coerce(rows: list[tuple], schema) -> list[tuple]:
     """Coerce DBAPI values to the declared Spark types (SQLite hands back
     ISO strings for timestamps and plain ints for bytes)."""
     ts_idx = [i for i, f in enumerate(schema.fields) if f.dataType.typeName() == "timestamp"]
-    if not ts_idx:
-        return [tuple(r) for r in rows]
     out = []
     for r in rows:
         r = list(r)
@@ -75,31 +66,51 @@ def _coerce(rows: list[tuple], schema) -> list[tuple]:
     return out
 
 
+def fetch_ready_rows(
+    conn_factory: ConnFactory,
+    table: str,
+    after_id: int,
+    upto_id: int | None = None,
+    limit: int | None = None,
+) -> list[tuple]:
+    """A queue table's ready rows with ``after_id < id [<= upto_id]``, in
+    id order, coerced to the table's schema:
+    ``WHERE <ready> AND id > ? [AND id <= ?] ORDER BY id ASC [LIMIT n]``."""
+    schema, ready = QUEUE_TABLES[table]
+    q = conn_factory.dialect.placeholder
+    sql = (
+        f"SELECT {', '.join(f.name for f in schema.fields)} FROM {table} "
+        f"WHERE {ready} AND id > {q}"
+    )
+    params: tuple = (after_id,)
+    if upto_id is not None:
+        sql += f" AND id <= {q}"
+        params += (upto_id,)
+    sql += " ORDER BY id ASC"
+    if limit is not None:
+        sql += f" LIMIT {limit}"
+    conn = conn_factory()
+    try:
+        cur = conn.cursor()
+        cur.execute(sql, params)
+        rows = cur.fetchall()
+    finally:
+        conn.close()
+    return _coerce(rows, schema)
+
+
 def _poll_ready(
     spark: SparkSession,
     conn_factory: ConnFactory,
     table: str,
     cfg: EngineConfig | None,
     last_id: int,
-    dialect: Dialect,
 ) -> tuple[DataFrame, int]:
-    """One poll of a queue table's ready rows past the id high-water mark:
-    ``WHERE <ready> AND id > ? ORDER BY id ASC LIMIT fetchSize``."""
+    """One poll of a queue table's ready rows past the id high-water mark,
+    at most ``mysql.fetch.size`` of them."""
     cfg = cfg or EngineConfig()
-    schema, ready = QUEUE_TABLES[table]
-    sql = (
-        f"SELECT {', '.join(f.name for f in schema.fields)} FROM {table} "
-        f"WHERE {ready} AND id > {dialect.placeholder} "
-        f"ORDER BY id ASC LIMIT {cfg.mysql_fetch_size}"
-    )
-    conn = conn_factory()
-    try:
-        cur = conn.cursor()
-        cur.execute(sql, (last_id,))
-        rows = cur.fetchall()
-    finally:
-        conn.close()
-    df = spark.createDataFrame(_coerce(rows, schema), schema)
+    rows = fetch_ready_rows(conn_factory, table, last_id, limit=cfg.mysql_fetch_size)
+    df = spark.createDataFrame(rows, QUEUE_TABLES[table][0])
     return df, max((r[0] for r in rows), default=last_id)
 
 
@@ -108,14 +119,13 @@ def poll_async_inv_in(
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
     last_id: int = 0,
-    dialect: Dialect = SQLITE,
 ) -> tuple[DataFrame, int]:
     """One poll of ``async_inv_in`` past the id high-water mark.
 
     Returns ``(rows, new_last_id)``; the caller persists ``new_last_id``
     as the stream offset.
     """
-    return _poll_ready(spark, conn_factory, "async_inv_in", cfg, last_id, dialect)
+    return _poll_ready(spark, conn_factory, "async_inv_in", cfg, last_id)
 
 
 def poll_async_inv_out(
@@ -123,11 +133,10 @@ def poll_async_inv_out(
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
     last_id: int = 0,
-    dialect: Dialect = SQLITE,
 ) -> tuple[DataFrame, int]:
     """One poll of ``async_inv_out`` (predicate ``res_type=2 AND state=0``,
     ``AsyncInvOutSource.java:55``)."""
-    return _poll_ready(spark, conn_factory, "async_inv_out", cfg, last_id, dialect)
+    return _poll_ready(spark, conn_factory, "async_inv_out", cfg, last_id)
 
 
 def claim_retry_batch(
@@ -135,7 +144,6 @@ def claim_retry_batch(
     conn_factory: ConnFactory,
     job: str,
     cfg: EngineConfig | None = None,
-    dialect: Dialect = SQLITE,
     now: datetime | None = None,
     reap_processing_after_s: int | None = None,
 ) -> DataFrame:
@@ -172,28 +180,28 @@ def claim_retry_batch(
     (``EngineConfig.processing_lease_s``) so live epochs never lose rows
     mid-flight.
 
-    Under a ``server_side_interval`` dialect the due check is the
-    reference's ``next_retry_time <= CURRENT_TIMESTAMP`` (DB clock,
+    When the factory's dialect is ``server_side_interval`` the due check is
+    the reference's ``next_retry_time <= CURRENT_TIMESTAMP`` (DB clock,
     ``InvoiceRetrySource.java:48``); otherwise "now" is bound client-side.
     """
     cfg = cfg or EngineConfig()
-    q = dialect.placeholder
-    when = now or _utcnow()
-    due = "CURRENT_TIMESTAMP" if dialect.server_side_interval else q
+    q = conn_factory.dialect.placeholder
+    server_side = conn_factory.dialect.server_side_interval
+    when = now or utcnow()
+    # "now" is the DB clock under a server-side dialect, else bound from here
+    now_sql, now_params = ("CURRENT_TIMESTAMP", ()) if server_side else (q, (when,))
     select_sql = (
         f"SELECT {', '.join(_RETRY_COLS)} FROM invoice_retry "
-        f"WHERE state = '{RETRY_STATE_PENDING}' AND next_retry_time <= {due} "
+        f"WHERE state = '{RETRY_STATE_PENDING}' AND next_retry_time <= {now_sql} "
         f"AND job = {q} ORDER BY next_retry_time LIMIT {cfg.retry_fetch_size}"
     )
     # the claim stamps next_retry_time = claim instant (the lease start
     # the reap sweep measures from — see docstring)
-    lease_start = "CURRENT_TIMESTAMP" if dialect.server_side_interval else q
     claim_sql = (
         f"UPDATE invoice_retry SET state = '{RETRY_STATE_PROCESSING}', "
-        f"next_retry_time = {lease_start} "
+        f"next_retry_time = {now_sql} "
         f"WHERE id = {q} AND state = '{RETRY_STATE_PENDING}'"
     )
-    select_params = (job,) if dialect.server_side_interval else (when, job)
     conn = conn_factory()
     try:
         cur = conn.cursor()
@@ -203,30 +211,23 @@ def claim_retry_batch(
             # (a client-clock cutoff vs a DB-clock lease re-opens the
             # skew-induced instant-reap this dialect exists to prevent),
             # client clock otherwise
-            if dialect.server_side_interval:
-                cur.execute(
-                    f"UPDATE invoice_retry SET state = '{RETRY_STATE_PENDING}' "
-                    f"WHERE state = '{RETRY_STATE_PROCESSING}' AND job = {q} "
-                    f"AND next_retry_time <= "
-                    f"CURRENT_TIMESTAMP - INTERVAL {q} SECOND",
-                    (job, int(reap_processing_after_s)),
-                )
+            if server_side:
+                cutoff_sql = f"CURRENT_TIMESTAMP - INTERVAL {q} SECOND"
+                cutoff = int(reap_processing_after_s)
             else:
-                stale_cutoff = (now or _utcnow()) - timedelta(
-                    seconds=reap_processing_after_s
-                )
-                cur.execute(
-                    f"UPDATE invoice_retry SET state = '{RETRY_STATE_PENDING}' "
-                    f"WHERE state = '{RETRY_STATE_PROCESSING}' AND job = {q} "
-                    f"AND next_retry_time <= {q}",
-                    (job, stale_cutoff),
-                )
-        cur.execute(select_sql, select_params)
+                cutoff_sql = q
+                cutoff = when - timedelta(seconds=reap_processing_after_s)
+            cur.execute(
+                f"UPDATE invoice_retry SET state = '{RETRY_STATE_PENDING}' "
+                f"WHERE state = '{RETRY_STATE_PROCESSING}' AND job = {q} "
+                f"AND next_retry_time <= {cutoff_sql}",
+                (job, cutoff),
+            )
+        cur.execute(select_sql, (*now_params, job))
         rows = cur.fetchall()
         claimed = []
-        claim_params_head = () if dialect.server_side_interval else (when,)
         for r in rows:
-            cur.execute(claim_sql, (*claim_params_head, r[0]))
+            cur.execute(claim_sql, (*now_params, r[0]))
             # rowcount 1 = we won the claim; 0 = a concurrent poller did
             if cur.rowcount == 1:
                 claimed.append(r)

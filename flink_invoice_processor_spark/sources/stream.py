@@ -32,9 +32,11 @@ Usage::
 Backends: ``backend=sqlite`` (default; ``db_path`` option — what tests
 run on) or ``backend=mysql`` (``host``/``port``/``user``/``password``/
 ``database`` options via :class:`~..dbdialect.MySQLConnFactory`; the
-driver library is import-gated since no MySQL client ships in this
-container).  Same SQL, same offsets either way — only ``_connect``
-differs.
+driver library is import-gated, as no MySQL client is a dependency).
+The reader builds its connection factory once
+(``SqliteConnFactory`` or ``MySQLConnFactory``); the SQL comes from
+``sources.dbapi.fetch_ready_rows`` in that factory's dialect, with the
+same offsets either way.
 
 
 VISIBILITY ASSUMPTION (same one the reference makes, AsyncInvInSource
@@ -49,89 +51,53 @@ commit-ordered sequence.
 
 from __future__ import annotations
 
-import sqlite3
 from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from .dbapi import QUEUE_TABLES, _coerce
-
-
-def queue_table_schema(table: str) -> StructType:
-    return QUEUE_TABLES[table][0]
+from .dbapi import QUEUE_TABLES, fetch_ready_rows
 
 
 class TableQueueStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict):
-        self.backend = options.get("backend", "sqlite")
-        if self.backend == "sqlite":
-            self.db_path = options["db_path"]
-            self._factory = None
-            self._param = "?"
-        elif self.backend == "mysql":
-            from ..dbdialect import MYSQL, MySQLConnFactory
+        backend = options.get("backend", "sqlite")
+        if backend == "sqlite":
+            from ..sinks.dbapi import SqliteConnFactory
 
-            self._factory = MySQLConnFactory(
+            self.conn_factory = SqliteConnFactory(options["db_path"])
+        elif backend == "mysql":
+            from ..dbdialect import MySQLConnFactory
+
+            self.conn_factory = MySQLConnFactory(
                 host=options["host"],
                 port=int(options.get("port", "3306")),
                 user=options["user"],
                 password=options.get("password", ""),
                 database=options["database"],
             )
-            self._param = MYSQL.placeholder
         else:
-            raise ValueError(f"unknown backend: {self.backend!r}")
+            raise ValueError(f"unknown backend: {backend!r}")
         self.table = options.get("table", "async_inv_in")
         if self.table not in QUEUE_TABLES:
             raise ValueError(f"unknown queue table: {self.table!r}")
-        self.schema, self.predicate = QUEUE_TABLES[self.table]
         self.fetch_size = int(options.get("fetch_size", "2000"))
-        self.columns = [f.name for f in self.schema.fields]
-
-    def _connect(self):
-        if self._factory is not None:
-            return self._factory()
-        return sqlite3.connect(self.db_path)
-
-    def _rows(self, where: str, params: tuple, limit: int | None) -> list[tuple]:
-        sql = (
-            f"SELECT {', '.join(self.columns)} FROM {self.table} "
-            f"WHERE {self.predicate} AND {where} ORDER BY id ASC"
-        )
-        if limit is not None:
-            sql += f" LIMIT {limit}"
-        conn = self._connect()
-        try:
-            # portable DBAPI cursor protocol — sqlite3's Connection.execute
-            # shortcut does not exist on pymysql/mysql-connector connections
-            cur = conn.cursor()
-            try:
-                cur.execute(sql, params)
-                rows = cur.fetchall()
-            finally:
-                cur.close()
-        finally:
-            conn.close()
-        return _coerce(rows, self.schema)
 
     def initialOffset(self) -> dict:
         return {"last_id": 0}
 
     def read(self, start: dict) -> Tuple[Iterator[Tuple], dict]:
-        q = self._param
-        rows = self._rows(f"id > {q}", (start["last_id"],), self.fetch_size)
+        rows = fetch_ready_rows(
+            self.conn_factory, self.table, start["last_id"], limit=self.fetch_size
+        )
         new_last = max((r[0] for r in rows), default=start["last_id"])
         return iter(rows), {"last_id": new_last}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[Tuple]:
         # deterministic replay of an uncommitted range after restart
-        q = self._param
         return iter(
-            self._rows(
-                f"id > {q} AND id <= {q}",
-                (start["last_id"], end["last_id"]),
-                None,
+            fetch_ready_rows(
+                self.conn_factory, self.table, start["last_id"], end["last_id"]
             )
         )
 
@@ -149,7 +115,7 @@ class TableQueueDataSource(DataSource):
         return "table_queue"
 
     def schema(self) -> StructType:
-        return queue_table_schema(self.options.get("table", "async_inv_in"))
+        return QUEUE_TABLES[self.options.get("table", "async_inv_in")][0]
 
     def simpleStreamReader(self, schema: StructType) -> TableQueueStreamReader:
         return TableQueueStreamReader(dict(self.options))

@@ -37,13 +37,13 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import EngineConfig, RETRY_JOB_REQUEST, RETRY_JOB_RESPONSE
+from ..dbdialect import ConnFactory
 from ..operators.request import parse_request_packets, transform_retry_records
 from ..operators.response import (
     process_response_batch,
     transform_response_retry_records,
 )
 from ..sinks.dbapi import (
-    ConnFactory,
     write_invoice_records,
     write_log_and_delete,
     write_retry_emissions,

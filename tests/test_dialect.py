@@ -87,7 +87,10 @@ def test_dialect_registry():
 class RecordingConnFactory:
     """Picklable fake DBAPI backend: every execute/executemany appends
     (sql, params) JSON lines to a shared file, so statements issued inside
-    Spark's Python workers are observable from the test process."""
+    Spark's Python workers are observable from the test process.  It
+    names MYSQL as its dialect, like ``MySQLConnFactory``."""
+
+    dialect = MYSQL
 
     def __init__(self, path: str):
         self.path = path
@@ -143,7 +146,7 @@ def test_mysql_sink_binds_delay_seconds(spark, tmp_path):
         ],
         RETRY_EMIT_SCHEMA,
     ).coalesce(1)
-    write_retry_emissions(emits, RecordingConnFactory(log), CFG, dialect=MYSQL)
+    write_retry_emissions(emits, RecordingConnFactory(log), CFG)
 
     stmts = RecordingConnFactory(log).read()
     by_sql = {s["sql"]: s["params"] for s in stmts}
@@ -162,9 +165,7 @@ def test_mysql_claim_uses_db_clock(spark, tmp_path):
     """S4 under MYSQL: due predicate is the reference's
     ``next_retry_time <= CURRENT_TIMESTAMP`` with only the job bound."""
     log = str(tmp_path / "mysql_claim.jsonl")
-    df = claim_retry_batch(
-        spark, RecordingConnFactory(log), "SendInvoiceJob", CFG, dialect=MYSQL
-    )
+    df = claim_retry_batch(spark, RecordingConnFactory(log), "SendInvoiceJob", CFG)
     assert df.count() == 0
     (stmt,) = RecordingConnFactory(log).read()
     assert "next_retry_time <= CURRENT_TIMESTAMP" in stmt["sql"]
@@ -193,10 +194,10 @@ def test_table_queue_mysql_backend_wires_factory():
             "table": "async_inv_out",
         }
     )
-    assert r._param == "%s"
-    assert isinstance(r._factory, MySQLConnFactory)
+    assert r.conn_factory.dialect.placeholder == "%s"
+    assert isinstance(r.conn_factory, MySQLConnFactory)
     with pytest.raises(ImportError):
-        r._connect()
+        r.conn_factory()
 
 
 def test_mysql_reap_uses_db_clock(spark, tmp_path):
@@ -206,9 +207,39 @@ def test_mysql_reap_uses_db_clock(spark, tmp_path):
     log = str(tmp_path / "mysql_reap.jsonl")
     claim_retry_batch(
         spark, RecordingConnFactory(log), "SendInvoiceJob", CFG,
-        dialect=MYSQL, reap_processing_after_s=60,
+        reap_processing_after_s=60,
     )
     stmts = RecordingConnFactory(log).read()
     reap = [s for s in stmts if "PROCESSING" in s["sql"] and "PENDING" in s["sql"]][0]
     assert "CURRENT_TIMESTAMP - INTERVAL %s SECOND" in reap["sql"]
     assert reap["params"] == ["SendInvoiceJob", 60]
+
+
+def test_job_path_uses_factory_dialect(spark, tmp_path):
+    """The jobs pass no dialect anywhere: every statement the request and
+    response micro-batches send must be in the dialect the connection
+    factory names (MYSQL here), never SQLite's qmark SQL."""
+    from flink_invoice_processor_spark.streaming import jobs
+
+    log = str(tmp_path / "mysql_jobs.jsonl")
+    factory = RecordingConnFactory(log)
+    packet = json.dumps(
+        {"inv_pack": [
+            {"api_type": 10, "sid": "S-1", "syncid": "Y-1", "stax": "123"},
+            {"api_type": 11, "syncid": "Y-2", "stax": "456"},  # no sid
+        ]}
+    )
+    jobs.request_micro_batch(
+        spark.createDataFrame([(packet,)], "value string"), spark, CFG, factory
+    )
+    jobs.response_cycle(spark, CFG, factory, lambda df: df.collect())
+
+    stmts = factory.read()
+    assert [s["sql"] for s in stmts if "?" in s["sql"]] == []
+    claims = [s for s in stmts if s["sql"].startswith("SELECT") and "invoice_retry" in s["sql"]]
+    assert len(claims) == 2  # one REQUEST claim, one RESPONSE claim
+    assert all("next_retry_time <= CURRENT_TIMESTAMP" in s["sql"] for s in claims)
+    (create,) = [s for s in stmts if s["sql"].startswith("INSERT INTO invoice_retry")]
+    assert create["sql"] == MYSQL.retry_insert_sql()
+    assert "CURRENT_TIMESTAMP + INTERVAL %s SECOND" in create["sql"]
+    assert create["params"][4] == CFG.app_retry_interval_ms // 1000

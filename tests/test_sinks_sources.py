@@ -100,6 +100,49 @@ def test_write_invoice_records(spark, db):
     assert rows == [("123", 10, None, "S-1", 0), ("456", 11, None, "S-2", 0)]
 
 
+class FailOnSecondExecutemany(SqliteConnFactory):
+    """SQLite factory whose connections raise on their second
+    ``executemany`` — a write that dies mid-partition."""
+
+    def __call__(self):
+        conn = super().__call__()
+        calls = []
+
+        class Cursor:
+            def executemany(self, sql, seq):
+                calls.append(sql)
+                if len(calls) == 2:
+                    raise sqlite3.OperationalError("injected failure")
+                return conn.executemany(sql, seq)
+
+        class Conn:
+            def cursor(self):
+                return Cursor()
+
+            def __getattr__(self, name):
+                return getattr(conn, name)
+
+        return Conn()
+
+
+def test_invoice_insert_is_all_or_nothing_per_partition(spark, db):
+    """W1 commits once per partition: a failure after the first
+    ``mysql.batch.size`` chunk leaves none of the partition's rows."""
+    from flink_invoice_processor_spark.operators.request import parse_request_packets
+
+    packet = json.dumps(
+        {"inv_pack": [
+            {"api_type": 10, "sid": f"S-{i}", "syncid": f"Y-{i}", "stax": "123"}
+            for i in range(5)
+        ]}
+    )
+    cfg = EngineConfig(mysql_batch_size=2, mysql_max_retries=0)
+    valid, _ = parse_request_packets(spark.createDataFrame([(packet,)], ["value"]), cfg)
+    with pytest.raises(Exception, match="injected failure"):
+        write_invoice_records(valid.coalesce(1), FailOnSecondExecutemany(db.path), cfg)
+    assert q(db, "SELECT count(*) FROM async_inv_in") == [(0,)]
+
+
 def test_retry_create_then_claim_lifecycle(spark, db):
     # CREATE: insert a due row and a future row
     emits = spark.createDataFrame(
