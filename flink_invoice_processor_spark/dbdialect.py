@@ -28,7 +28,7 @@ the MySQL path deliberately matches the reference (DB clock).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any, Protocol
 
@@ -111,12 +111,19 @@ class ConnFactory(Protocol):
 
     def __call__(self) -> Any: ...
 
+    def table_queue_options(self) -> dict[str, str]:
+        """The ``table_queue`` stream-source options that rebuild this
+        factory (``sources.stream``), so a streaming reader polls the
+        same database the factory's connections reach."""
+        ...
+
 
 def utcnow() -> datetime:
     """The client clock as naive UTC (the clock of client-side dialects)."""
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
+@dataclass(frozen=True)
 class MySQLConnFactory:
     """Picklable MySQL connection factory (production twin of
     ``SqliteConnFactory``).  Import-gated: neither PyMySQL nor
@@ -127,10 +134,18 @@ class MySQLConnFactory:
 
     dialect = MYSQL
 
-    def __init__(self, host: str, user: str, password: str, database: str,
-                 port: int = 3306):
-        self.host, self.port = host, port
-        self.user, self.password, self.database = user, password, database
+    host: str
+    user: str
+    password: str = field(repr=False)
+    database: str
+    port: int = 3306
+
+    def table_queue_options(self) -> dict[str, str]:
+        return {
+            "backend": "mysql", "host": self.host, "port": str(self.port),
+            "user": self.user, "password": self.password,
+            "database": self.database,
+        }
 
     def __call__(self):
         try:

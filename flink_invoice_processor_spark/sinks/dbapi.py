@@ -42,6 +42,7 @@ observable rows, fewer round trips.
 from __future__ import annotations
 
 import time
+from dataclasses import dataclass
 from datetime import datetime, timedelta
 from typing import Callable, Iterable
 
@@ -55,6 +56,7 @@ from ..schemas import ASYNC_INV_SUCC_LOG_RECORD, INVOICE_MYSQL_RECORD
 Statements = list[tuple[str, list[tuple]]]
 
 
+@dataclass(frozen=True)
 class SqliteConnFactory:
     """Picklable SQLite connection factory (tests / local stand-in for the
     reference's MySQL).  A class instead of a closure so executors resolve
@@ -62,9 +64,11 @@ class SqliteConnFactory:
 
     dialect = SQLITE
 
-    def __init__(self, path: str, timeout: float = 30.0):
-        self.path = path
-        self.timeout = timeout
+    path: str
+    timeout: float = 30.0
+
+    def table_queue_options(self) -> dict[str, str]:
+        return {"backend": "sqlite", "db_path": self.path}
 
     def __call__(self):
         import sqlite3

@@ -26,6 +26,22 @@ pushdown).  The high-water mark is returned to the caller, who persists it
 ``AsyncInvInSource.java:35-49`` is commented out; our driver loop can
 checkpoint it, a strict upgrade).
 
+The fetched rows reach Spark as one ``pyarrow.Table`` built against the
+Spark schema's Arrow schema, so each poll and claim plans as a JVM
+``LocalRelation``.  Two reasons:
+
+- Cost.  ``createDataFrame`` on a Python list plans a ``LogicalRDD`` over
+  a Python RDD, and every Spark job that scans it (up to seven per
+  response micro-batch: each sink re-executes the plan) runs Python-worker
+  tasks that re-pickle the rows.  A ``LocalRelation`` is scanned in the
+  JVM, at no Python-worker cost.
+- Time zone.  The list path reads a naive ``datetime`` through
+  ``TimestampType.toInternal`` (``time.mktime``), i.e. in the host's time
+  zone; the Arrow path reads it as UTC, the session time zone
+  (``session.py``).  Read the list way on a UTC+7 host, a ``created_date``
+  of ``2026-01-01 00:00:00`` serializes as ``2025-12-31T17:00:00.000Z``
+  in packets and retry payloads.
+
 Scale note: one poller per table matches the reference (source parallelism
 1) and is the right shape for a queue table; for *backfill* of a huge
 table use ``spark.read.jdbc(..., partitionColumn="id", numPartitions=N)``
@@ -36,7 +52,10 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..config import EngineConfig, RETRY_STATE_PENDING, RETRY_STATE_PROCESSING
 from ..dbdialect import ConnFactory, utcnow
@@ -64,6 +83,20 @@ def _coerce(rows: list[tuple], schema) -> list[tuple]:
                 r[i] = datetime.fromisoformat(r[i])
         out.append(tuple(r))
     return out
+
+
+def _local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType
+) -> DataFrame:
+    """``rows`` (already coerced to ``schema``) as a DataFrame over a JVM
+    ``LocalRelation``, built from one Arrow table (see module docstring)."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def fetch_ready_rows(
@@ -110,7 +143,7 @@ def _poll_ready(
     at most ``mysql.fetch.size`` of them."""
     cfg = cfg or EngineConfig()
     rows = fetch_ready_rows(conn_factory, table, last_id, limit=cfg.mysql_fetch_size)
-    df = spark.createDataFrame(rows, QUEUE_TABLES[table][0])
+    df = _local_frame(spark, rows, QUEUE_TABLES[table][0])
     return df, max((r[0] for r in rows), default=last_id)
 
 
@@ -240,6 +273,6 @@ def claim_retry_batch(
         raise
     else:
         conn.close()
-    return spark.createDataFrame(
-        _coerce(claimed, INVOICE_RETRY_RECORD), INVOICE_RETRY_RECORD
+    return _local_frame(
+        spark, _coerce(claimed, INVOICE_RETRY_RECORD), INVOICE_RETRY_RECORD
     )

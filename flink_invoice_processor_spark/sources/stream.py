@@ -36,7 +36,9 @@ driver library is import-gated, as no MySQL client is a dependency).
 The reader builds its connection factory once
 (``SqliteConnFactory`` or ``MySQLConnFactory``); the SQL comes from
 ``sources.dbapi.fetch_ready_rows`` in that factory's dialect, with the
-same offsets either way.
+same offsets either way.  ``factory.table_queue_options()`` returns the
+options that rebuild a factory here, which is how the streaming response
+job points its reader at the database its sinks write.
 
 
 VISIBILITY ASSUMPTION (same one the reference makes, AsyncInvInSource

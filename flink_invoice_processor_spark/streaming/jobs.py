@@ -158,7 +158,6 @@ def response_cycle(
 def run_invoice_response_stream_job(
     spark: SparkSession,
     cfg: EngineConfig,
-    db_path: str,
     conn_factory: ConnFactory,
     packet_sink: Callable[[DataFrame], None],
     checkpoint_dir: str,
@@ -169,6 +168,12 @@ def run_invoice_response_stream_job(
     checkpoint), watermark-bounded cross-batch dedup, then per micro-batch
     the envelope pipeline + Kafka-then-DB sink ordering inside
     ``foreachBatch``.
+
+    The queue reader and the sinks reach one database: the reader is
+    built from ``conn_factory.table_queue_options()``, so a
+    ``MySQLConnFactory`` deployment polls MySQL, not a SQLite file.  The
+    per-batch retry claim inside ``respond`` reaches Spark as an Arrow
+    ``LocalRelation`` (``sources.dbapi``), like the driver loop's polls.
 
     This is the fully-streaming alternative to the ``response_cycle``
     driver loop: same operators, but high-water marks and dedup state are
@@ -185,7 +190,7 @@ def run_invoice_response_stream_job(
     def queue_stream(table: str) -> DataFrame:
         return (
             spark.readStream.format("table_queue")
-            .option("db_path", db_path)
+            .options(**conn_factory.table_queue_options())
             .option("table", table)
             .option("fetch_size", str(cfg.mysql_fetch_size))
             .load()

@@ -58,7 +58,7 @@ def test_streaming_response_end_to_end(spark, tmp_path):
             conn.close()
 
     q = run_invoice_response_stream_job(
-        spark, CFG, db_path, factory, packet_sink,
+        spark, CFG, factory, packet_sink,
         str(tmp_path / "ckpt"), trigger_ms=300,
     )
     try:
@@ -176,7 +176,7 @@ def test_response_entry_points_share_one_body(spark, tmp_path):
         return len(state["error_log"]) == 1 and [r[0] for r in state["retry"]] == ["S-N"]
 
     q = run_invoice_response_stream_job(
-        spark, PARITY_CFG, stream_db, SqliteConnFactory(stream_db),
+        spark, PARITY_CFG, SqliteConnFactory(stream_db),
         lambda df: stream_packets.extend(df.collect()),
         str(tmp_path / "ckpt"), trigger_ms=300,
     )

@@ -6,12 +6,20 @@ claiming retry source (S4)."""
 from __future__ import annotations
 
 import json
+import os
 import sqlite3
+import time
 from datetime import datetime, timedelta
 
 import pytest
+from pyspark.sql import functions as F
 
 from flink_invoice_processor_spark.config import EngineConfig
+from flink_invoice_processor_spark.schemas import (
+    ASYNC_INV_IN_RECORD,
+    ASYNC_INV_OUT_RECORD,
+    INVOICE_RETRY_RECORD,
+)
 from flink_invoice_processor_spark.sinks.dbapi import (
     SqliteConnFactory,
     write_invoice_records,
@@ -326,3 +334,133 @@ def test_retry_stale_claim_reaper(spark, db):
     assert q(db, "SELECT state FROM invoice_retry WHERE sid='S-9'") == [
         ("PROCESSING",)
     ]
+
+
+# -- the sources hand Spark JVM-local relations ---------------------------------
+
+
+class DatetimeSqliteConnFactory(SqliteConnFactory):
+    """SQLite returning ``TIMESTAMP`` columns as ``datetime`` (as a MySQL
+    driver does) instead of ISO strings."""
+
+    def __call__(self):
+        return sqlite3.connect(
+            self.path, timeout=self.timeout, detect_types=sqlite3.PARSE_DECLTYPES
+        )
+
+
+def _seed_sources(factory) -> None:
+    """One ready row per queue table with NULL ints, strings and
+    timestamps next to microsecond timestamps, plus one due retry row per
+    job."""
+    conn = factory()
+    conn.execute(
+        "INSERT INTO async_inv_in (id, tax_schema, inv, api_type, res_type, "
+        "fpt_einvoice_res_code, retry, state, group_id, created_date, sid, syncid) "
+        "VALUES (7, 't', '{}', 10, 2, NULL, NULL, 4, 1, "
+        "'2026-01-01 00:00:00.123456', 'S-7', 'Y-7')"
+    )
+    conn.execute(
+        "INSERT INTO async_inv_out (id, tax_schema, gdt_res, sid, syncid, retry, "
+        "state, group_id, res_type, api_type, created_date, updated_date) "
+        "VALUES (3, 'o', NULL, 'SO', NULL, 0, 0, NULL, 2, 11, "
+        "'2026-01-01 00:00:00.000001', '2026-01-02 03:04:05.654321')"
+    )
+    for job in ("REQUEST", "RESPONSE"):
+        conn.execute(
+            "INSERT INTO invoice_retry (sid, syncid, job, payload, error_message, "
+            "error_code, retry_count, state, next_retry_time, created_at) "
+            "VALUES (?, NULL, ?, '{}', 'boom', NULL, 2, 'PENDING', "
+            "'2025-12-31 23:59:59.999999', NULL)",
+            (f"S-{job}", job),
+        )
+    conn.commit()
+    conn.close()
+
+
+def _str_timestamps(df):
+    """``df`` with its timestamps cast to strings in the session time zone,
+    so expected rows do not depend on the host's."""
+    return df.select(
+        [
+            F.col(f.name).cast("string") if f.dataType.typeName() == "timestamp"
+            else F.col(f.name)
+            for f in df.schema.fields
+        ]
+    )
+
+
+def test_sources_plan_as_jvm_local_relations(spark, db):
+    _seed_sources(db)
+    in_df, in_hwm = poll_async_inv_in(spark, db, CFG, last_id=0)
+    out_df, out_hwm = poll_async_inv_out(spark, db, CFG, last_id=0)
+    claimed = claim_retry_batch(spark, db, "REQUEST", CFG, now=NOW)
+    empty = [
+        poll_async_inv_in(spark, db, CFG, last_id=in_hwm)[0],
+        poll_async_inv_out(spark, db, CFG, last_id=out_hwm)[0],
+        claim_retry_batch(spark, db, "REQUEST", CFG, now=NOW),
+    ]
+    for df, n in [(in_df, 1), (out_df, 1), (claimed, 1)] + [(e, 0) for e in empty]:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+        assert df.count() == n
+
+
+@pytest.mark.parametrize("factory_cls", [SqliteConnFactory, DatetimeSqliteConnFactory])
+def test_polled_values_survive_arrow_build(spark, db, factory_cls):
+    factory = factory_cls(db.path)
+    _seed_sources(factory)
+    if factory_cls is DatetimeSqliteConnFactory:
+        raw = factory().execute("SELECT created_date FROM async_inv_in").fetchone()
+        assert isinstance(raw[0], datetime)  # the MySQL-driver shape
+
+    in_df, in_hwm = poll_async_inv_in(spark, factory, CFG, last_id=0)
+    assert _str_timestamps(in_df).collect() == [(
+        7, "t", "{}", 10, 2, None, None, None, None, 4, 1,
+        "2026-01-01 00:00:00.123456", None, None, None, None, "S-7", "Y-7", None,
+    )]
+    out_df, out_hwm = poll_async_inv_out(spark, factory, CFG, last_id=0)
+    assert _str_timestamps(out_df).collect() == [(
+        3, "o", None, "SO", None, 0, 0, None, 2, 11,
+        "2026-01-01 00:00:00.000001", "2026-01-02 03:04:05.654321", None,
+    )]
+    claimed = claim_retry_batch(spark, factory, "RESPONSE", CFG, now=NOW)
+    assert _str_timestamps(claimed).collect() == [(
+        2, "S-RESPONSE", None, "RESPONSE", "{}", "boom", None, 2, "PENDING",
+        "2025-12-31 23:59:59.999999", None, None,
+    )]
+
+    # an empty fetch keeps the full schema, nullability included
+    for df, schema in [
+        (poll_async_inv_in(spark, factory, CFG, last_id=in_hwm)[0], ASYNC_INV_IN_RECORD),
+        (poll_async_inv_out(spark, factory, CFG, last_id=out_hwm)[0], ASYNC_INV_OUT_RECORD),
+        (claim_retry_batch(spark, factory, "RESPONSE", CFG, now=NOW), INVOICE_RETRY_RECORD),
+    ]:
+        assert df.select("*").schema == schema
+        assert df.collect() == []
+
+
+def test_polled_timestamps_ignore_host_time_zone(spark, db):
+    """A naive polled timestamp is read in the session time zone (UTC), not
+    the host's: on a UTC+7 host ``2026-01-01 00:00:00`` must still
+    serialize as midnight UTC in the packets and retry payloads."""
+    _seed_sources(db)
+    conn = db()
+    conn.execute(
+        "UPDATE async_inv_in SET created_date = '2026-01-01 00:00:00' WHERE id = 7"
+    )
+    conn.commit()
+    conn.close()
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Ho_Chi_Minh"
+    time.tzset()
+    try:
+        df, _ = poll_async_inv_in(spark, db, CFG, last_id=0)
+        (row,) = df.select(F.to_json(F.struct("created_date")).alias("j")).collect()
+    finally:
+        if saved is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+    assert json.loads(row.j) == {"created_date": "2026-01-01T00:00:00.000Z"}
