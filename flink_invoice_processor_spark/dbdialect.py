@@ -104,8 +104,9 @@ DIALECTS = {d.name: d for d in (SQLITE, MYSQL)}
 
 class ConnFactory(Protocol):
     """Picklable zero-arg callable returning a DBAPI connection, tagged
-    with the dialect its connections speak.  Executors call it to open
-    their own connections."""
+    with the dialect its connections speak.  The sinks and the polls call
+    it on the driver; the ``table_queue`` reader calls it in a Python
+    worker, which is why it must pickle."""
 
     dialect: Dialect
 
@@ -129,7 +130,7 @@ class MySQLConnFactory:
     ``SqliteConnFactory``).  Import-gated: neither PyMySQL nor
     mysql-connector ships in this container, so construction succeeds (it
     only stores parameters) and ``__call__`` raises ``ImportError`` with a
-    clear message if no driver is installed on the executors.
+    clear message if no driver is installed where it is called.
     """
 
     dialect = MYSQL
@@ -167,6 +168,6 @@ class MySQLConnFactory:
             )
         except ImportError as e:
             raise ImportError(
-                "MySQL backend requires pymysql or mysql-connector-python "
-                "on the executors (neither is installed in this container)"
+                "MySQL backend requires pymysql or mysql-connector-python; "
+                "neither is installed"
             ) from e

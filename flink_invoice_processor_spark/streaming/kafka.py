@@ -66,6 +66,19 @@ def kafka_reader_options(cfg: EngineConfig) -> dict[str, str]:
     would only risk offset-commit collisions between the five collapsed
     sources.  COMMITTED therefore maps to "resume from checkpoint", with
     "latest" as the cold-start behavior.
+
+    ``maxOffsetsPerTrigger`` is ``mysql.batch.size``, so the micro-batch
+    the driver-side sinks (``sinks.dbapi``) collect stays bounded.  It
+    counts packets (Kafka records), not invoices: a trigger, and so one
+    sink transaction, holds up to ``mysql.batch.size`` times the invoices
+    per packet (1-50 in perfbench's packets) rows.  The cap slows backlog
+    drains: each trigger pays the request job's fixed per-micro-batch
+    cost, and one that ends inside the ``mysql.batch.interval.ms``
+    interval idles until the next.  ``tools/kafka_backlog_drain.py``
+    measured it on 4 vCPUs: steady 2,000-packet triggers took 3.0-4.3 s;
+    a 30,000-invoice backlog drained in 24-30 s, and a 60,000-invoice one
+    in 52 s, against 20 s and 22 s in one unbounded trigger (ROADMAP
+    item 1).
     """
     starting = {
         "LATEST": "latest",
@@ -79,6 +92,7 @@ def kafka_reader_options(cfg: EngineConfig) -> dict[str, str]:
         "subscribe": ",".join(cfg.request_topics.values()),
         "startingOffsets": starting,
         "failOnDataLoss": "false",
+        "maxOffsetsPerTrigger": str(cfg.mysql_batch_size),
     }
     opts.update(_sasl_options(cfg))
     return opts

@@ -26,12 +26,15 @@ def cfg_with_sasl() -> EngineConfig:
 
 
 def test_reader_subscribes_all_five_request_topics():
-    opts = kafka_reader_options(EngineConfig())
+    cfg = EngineConfig()
+    opts = kafka_reader_options(cfg)
     topics = opts["subscribe"].split(",")
     # the reference's five topic-pinned sources (InvoiceRequest.java:53-69)
     assert topics == [f"mtt.{API_TYPE_NAMES[t]}.request" for t in API_TYPES]
     assert opts["kafka.bootstrap.servers"] == ""
     assert opts["failOnDataLoss"] == "false"
+    # one trigger holds at most one insert batch's worth of packets
+    assert opts["maxOffsetsPerTrigger"] == str(cfg.mysql_batch_size)
 
 
 def test_reader_sasl_properties_match_reference_keys():
@@ -82,9 +85,11 @@ def test_properties_file_overrides_reach_reader_options(tmp_path):
         "kafka.bootstrap=b1:9092\n"
         "kafka.starting.offsets=EARLIEST\n"
         "kafka.topic.crt.request=alt.crt.request\n"
+        "mysql.batch.size=500\n"
     )
     cfg = load_config(props)
     opts = kafka_reader_options(cfg)
     assert opts["kafka.bootstrap.servers"] == "b1:9092"
     assert opts["startingOffsets"] == "earliest"
     assert opts["subscribe"].split(",")[0] == "alt.crt.request"
+    assert opts["maxOffsetsPerTrigger"] == str(cfg.mysql_batch_size) == "500"

@@ -1,7 +1,8 @@
 """The summary of ``tools/perfbench_pairs.py``: medians, quartiles,
-pairs won with ties counting for neither, and the gain rule (at least ten
+pairs won with ties counting for neither, the gain rule (at least ten
 pairs, nine tenths of them won, and a median difference beyond the
-parent's quartile spread)."""
+parent's quartile spread) and the no-regression verdict against each
+end-to-end metric's bound."""
 
 from __future__ import annotations
 
@@ -76,3 +77,43 @@ def test_gain_needs_ten_pairs_and_a_gap_beyond_the_parent_spread(monkeypatch):
     # one pair has no spread to beat, and is still no gain
     row = cpu_row([10.0], 5.0)
     assert row["wins"] == row["pairs"] == 1 and not row["gain"]
+
+
+def test_verdict_against_the_bound(monkeypatch):
+    tool = _tool(monkeypatch)
+    tight = [10.0, 10.1, 10.2, 10.3, 10.4]
+    # a median within the bound with tight spreads is ok, better or worse
+    assert tool.verdict(tight, [x * 1.2 for x in tight], True, 0.25) == "ok"
+    assert tool.verdict(tight, [x * 0.5 for x in tight], True, 0.25) == "ok"
+    # beyond the bound is worse, in either direction of "better"
+    assert tool.verdict(tight, [x * 1.3 for x in tight], True, 0.25) == "worse"
+    assert tool.verdict(tight, [x * 0.7 for x in tight], False, 0.25) == "worse"
+    assert tool.verdict(tight, [x * 1.3 for x in tight], False, 0.25) == "ok"
+    # a spread wider than the bound cannot tell, on either side ...
+    wide = [6.0, 8.0, 10.0, 12.0, 14.0]
+    assert tool.verdict(wide, wide, True, 0.25) == "unresolved"
+    assert tool.verdict(tight, [x - 0.2 for x in wide], True, 0.25) == "unresolved"
+    # ... unless every change run beats every parent run
+    assert tool.verdict(wide, [x / 3 for x in wide], True, 0.25) == "ok"
+    assert tool.verdict(wide, [x * 3 for x in wide], False, 0.25) == "ok"
+
+
+def test_summary_gives_bounded_metrics_a_verdict(monkeypatch):
+    tool = _tool(monkeypatch)
+    records = []
+    for seed in range(4):
+        records.append(_rec("parent", seed, 10.0, 100.0 + seed))
+        records.append(_rec("change", seed, 14.0, 100.0 + seed))
+    rows = {r["metric"]: r for r in tool.summarize(
+        records, {"throughput_per_cpu_s": "higher"}, {"op_cpu_p50_s": 0.25})}
+    assert rows["op_cpu_p50_s"]["verdict"] == "worse"
+    assert rows["throughput_per_cpu_s"]["verdict"] is None
+
+
+def test_bounds_come_from_the_benchmark_declaration(monkeypatch):
+    tool = _tool(monkeypatch)
+    better, bounds = tool.benchmark_metrics(str(TOOL.parents[1]))
+    assert bounds == {"throughput_per_cpu_s": 0.25, "op_cpu_p50_s": 0.25,
+                      "setup_s": 0.25, "peak_rss_mb": 0.25}
+    assert better["throughput_per_cpu_s"] == "higher"
+    assert better["sources.dbapi.poll.self_s"] == "lower"

@@ -5,10 +5,14 @@ claiming retry source (S4)."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import pickle
 import sqlite3
+import threading
 import time
+from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
 import pytest
@@ -19,6 +23,7 @@ from flink_invoice_processor_spark.schemas import (
     ASYNC_INV_IN_RECORD,
     ASYNC_INV_OUT_RECORD,
     INVOICE_RETRY_RECORD,
+    RESPONSE_ENVELOPE,
 )
 from flink_invoice_processor_spark.sinks.dbapi import (
     SqliteConnFactory,
@@ -110,7 +115,7 @@ def test_write_invoice_records(spark, db):
 
 class FailOnSecondExecutemany(SqliteConnFactory):
     """SQLite factory whose connections raise on their second
-    ``executemany`` — a write that dies mid-partition."""
+    ``executemany`` — a write that dies mid-transaction."""
 
     def __call__(self):
         conn = super().__call__()
@@ -133,22 +138,110 @@ class FailOnSecondExecutemany(SqliteConnFactory):
         return Conn()
 
 
-def test_invoice_insert_is_all_or_nothing_per_partition(spark, db):
-    """W1 commits once per partition: a failure after the first
-    ``mysql.batch.size`` chunk leaves none of the partition's rows."""
+def _valid_records(spark, n, cfg=CFG, now_expr=None):
+    """The valid ``async_inv_in`` records parsed from one packet of ``n``
+    elements."""
     from flink_invoice_processor_spark.operators.request import parse_request_packets
 
     packet = json.dumps(
         {"inv_pack": [
             {"api_type": 10, "sid": f"S-{i}", "syncid": f"Y-{i}", "stax": "123"}
-            for i in range(5)
+            for i in range(n)
         ]}
     )
+    valid, _ = parse_request_packets(
+        spark.createDataFrame([(packet,)], ["value"]), cfg, now_expr=now_expr
+    )
+    return valid
+
+
+def test_invoice_insert_is_all_or_nothing_per_partition(spark, db):
+    """W1 commits once per call: a failure after the first
+    ``mysql.batch.size`` chunk of a one-partition frame leaves none of its
+    rows."""
     cfg = EngineConfig(mysql_batch_size=2, mysql_max_retries=0)
-    valid, _ = parse_request_packets(spark.createDataFrame([(packet,)], ["value"]), cfg)
+    valid = _valid_records(spark, 5, cfg)
     with pytest.raises(Exception, match="injected failure"):
         write_invoice_records(valid.coalesce(1), FailOnSecondExecutemany(db.path), cfg)
     assert q(db, "SELECT count(*) FROM async_inv_in") == [(0,)]
+
+
+def test_invoice_insert_is_all_or_nothing_across_partitions(spark, db):
+    """One sink call is one transaction, however its frame is partitioned:
+    a failure in the second chunk leaves none of the call's rows, the
+    rows of a partition that had no failing chunk included."""
+    cfg = EngineConfig(mysql_batch_size=2, mysql_max_retries=0)
+    valid = _valid_records(spark, 5, cfg).repartition(2)
+    assert sorted(len(p) for p in valid.rdd.glom().collect()) == [2, 3]
+    with pytest.raises(Exception, match="injected failure"):
+        write_invoice_records(valid, FailOnSecondExecutemany(db.path), cfg)
+    assert q(db, "SELECT count(*) FROM async_inv_in") == [(0,)]
+
+
+@dataclass(frozen=True)
+class LockedSqliteConnFactory(SqliteConnFactory):
+    """A SQLite factory holding a lock, which cannot be pickled: a sink
+    that writes through it opened its connection in this process."""
+
+    lock: threading.Lock = field(default_factory=threading.Lock)
+
+
+class RaisingConnFactory(SqliteConnFactory):
+    """A factory that fails the test if anything opens a connection."""
+
+    def __call__(self):
+        raise AssertionError("connection opened")
+
+
+def test_sinks_write_from_the_driver(spark, db):
+    factory = LockedSqliteConnFactory(db.path)
+    with pytest.raises(TypeError):
+        pickle.dumps(factory)
+
+    write_invoice_records(_valid_records(spark, 3).repartition(2), factory, CFG)
+    assert q(db, "SELECT count(*) FROM async_inv_in") == [(3,)]
+
+    emits = spark.createDataFrame(
+        [("CREATE", None, f"S-{i}", "Y", "REQUEST", "{}", "boom", "E", 0, "PENDING", 5)
+         for i in range(3)],
+        RETRY_EMIT_SCHEMA,
+    ).repartition(2)
+    write_retry_emissions(emits, factory, CFG, now=NOW)
+    assert q(db, "SELECT count(*) FROM invoice_retry") == [(3,)]
+
+    ops = spark.createDataFrame(
+        [("inv_in", i, 10, f"S-{i}", "Y", "123", 0, 1, 2,
+          None, None, None, None, None, None, None, None)
+         for i in (1, 2, 3)],
+        RESPONSE_ENVELOPE,
+    ).repartition(2)
+    write_log_and_delete(ops, factory, CFG, now=NOW)
+    assert q(db, "SELECT count(*) FROM async_inv_in") == [(0,)]
+    assert q(db, "SELECT count(*) FROM async_inv_succ_log") == [(3,)]
+
+
+def test_empty_sink_calls_open_no_connection(spark, db):
+    """An idle micro-batch costs the queue database nothing: a sink call
+    with no rows never calls its factory, however many partitions its
+    empty frame has."""
+    factory = RaisingConnFactory(db.path)
+
+    def empty(df):
+        # empty partitions the optimizer cannot prove empty
+        return df.repartition(3).where(F.col("sid") == "no such sid")
+
+    write_invoice_records(empty(_valid_records(spark, 3)), factory, CFG)
+    emits = spark.createDataFrame(
+        [("CREATE", None, "S", "Y", "REQUEST", "{}", "m", "E", 0, "PENDING", 5)],
+        RETRY_EMIT_SCHEMA,
+    )
+    write_retry_emissions(empty(emits), factory, CFG)
+    ops = spark.createDataFrame(
+        [("inv_in", 1, 10, "S", "Y", "123", 0, 1, 2,
+          None, None, None, None, None, None, None, None)],
+        RESPONSE_ENVELOPE,
+    )
+    write_log_and_delete(empty(ops), factory, CFG)
 
 
 def test_retry_create_then_claim_lifecycle(spark, db):
@@ -440,6 +533,22 @@ def test_polled_values_survive_arrow_build(spark, db, factory_cls):
         assert df.collect() == []
 
 
+@contextlib.contextmanager
+def _host_time_zone(tz):
+    """Run the block with the process's local time zone set to ``tz``."""
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = tz
+    time.tzset()
+    try:
+        yield
+    finally:
+        if saved is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+
+
 def test_polled_timestamps_ignore_host_time_zone(spark, db):
     """A naive polled timestamp is read in the session time zone (UTC), not
     the host's: on a UTC+7 host ``2026-01-01 00:00:00`` must still
@@ -451,16 +560,19 @@ def test_polled_timestamps_ignore_host_time_zone(spark, db):
     )
     conn.commit()
     conn.close()
-    saved = os.environ.get("TZ")
-    os.environ["TZ"] = "Asia/Ho_Chi_Minh"
-    time.tzset()
-    try:
+    with _host_time_zone("Asia/Ho_Chi_Minh"):
         df, _ = poll_async_inv_in(spark, db, CFG, last_id=0)
         (row,) = df.select(F.to_json(F.struct("created_date")).alias("j")).collect()
-    finally:
-        if saved is None:
-            os.environ.pop("TZ")
-        else:
-            os.environ["TZ"] = saved
-        time.tzset()
     assert json.loads(row.j) == {"created_date": "2026-01-01T00:00:00.000Z"}
+
+
+def test_written_timestamps_ignore_host_time_zone(spark, db):
+    """W1 stores ``created_date`` as naive UTC, like every other engine
+    timestamp, whatever the host's zone: on a UTC+7 host midnight UTC is
+    stored as midnight, not as 07:00."""
+    valid = _valid_records(
+        spark, 1, now_expr=F.lit("2026-01-01 00:00:00").cast("timestamp")
+    )
+    with _host_time_zone("Asia/Ho_Chi_Minh"):
+        write_invoice_records(valid, db, CFG)
+    assert q(db, "SELECT created_date FROM async_inv_in") == [("2026-01-01 00:00:00",)]

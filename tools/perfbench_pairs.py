@@ -9,15 +9,18 @@ afterwards the file is summarized per workload and metric: each side's
 median and quartiles, and how many pairs the change won (ties count for
 neither).  A metric is marked ``gain`` when at least ten pairs ran, the
 change won at least nine tenths of them, and the medians differ by more
-than the distance between the parent's quartiles.
+than the distance between the parent's quartiles.  Each end-to-end metric
+also gets a no-regression verdict against its ``bound`` in
+``BENCHMARK.json`` (see :func:`verdict`): ``ok``, ``worse`` or
+``unresolved``.
 
     python3 tools/perfbench_pairs.py --parent HEAD~1 --seeds 41 42 43 \\
         --workloads request_ingest response_drain --out pairs.jsonl
     python3 tools/perfbench_pairs.py --summarize pairs.jsonl
 
 Run it from the root of a source checkout.  Each metric's better
-direction comes from ``BENCHMARK.json``; metrics it does not list are
-taken as lower-is-better.
+direction and bound come from ``BENCHMARK.json``; metrics it does not
+list are taken as lower-is-better, with no verdict.
 """
 
 from __future__ import annotations
@@ -45,10 +48,32 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def summarize(records: list[dict], better: dict[str, str]) -> list[dict]:
+def verdict(parent: list[float], change: list[float], lower: bool, bound: float) -> str:
+    """No-regression verdict for one end-to-end metric over every run of
+    each side.  ``worse``: the change's median is worse than the parent's
+    by more than ``bound`` (a fraction of the parent's median).
+    ``unresolved``: it is not, but either side's quartile spread is wider
+    than the bound, and not every change run beats every parent run.
+    Otherwise ``ok``."""
+    pq1, pmed, pq3 = quartiles(parent)
+    cq1, cmed, cq3 = quartiles(change)
+    scale = abs(pmed) or 1.0
+    worse_by = (cmed - pmed if lower else pmed - cmed) / scale
+    if worse_by > bound:
+        return "worse"
+    all_better = max(change) < min(parent) if lower else min(change) > max(parent)
+    if max(pq3 - pq1, cq3 - cq1) / scale > bound and not all_better:
+        return "unresolved"
+    return "ok"
+
+
+def summarize(records: list[dict], better: dict[str, str],
+              bounds: dict[str, float] | None = None) -> list[dict]:
     """One row per (workload, trace, metric) over ``records`` (the JSONL
     lines this tool writes).  A pair is the two sides' runs of one
-    workload, seed and trace setting."""
+    workload, seed and trace setting.  A metric named in ``bounds`` also
+    gets its :func:`verdict`; the others get ``None``."""
+    bounds = bounds or {}
     runs: dict[tuple, dict[str, dict]] = {}
     for rec in records:
         if rec.get("result") is not None:
@@ -88,6 +113,8 @@ def summarize(records: list[dict], better: dict[str, str]) -> list[dict]:
                 "pairs": n_pairs, "wins": wins,
                 "gain": (n_pairs >= MIN_PAIRS and wins >= 0.9 * n_pairs
                          and improved and abs(cmed - pmed) > pq3 - pq1),
+                "verdict": (verdict(side_values["parent"], side_values["change"],
+                                    lower, bounds[name]) if name in bounds else None),
             })
     return rows
 
@@ -109,23 +136,27 @@ def correctness(records: list[dict]) -> dict[tuple, dict[str, int]]:
     return out
 
 
-def print_summary(records: list[dict], better: dict[str, str]) -> None:
+def print_summary(records: list[dict], better: dict[str, str],
+                  bounds: dict[str, float] | None = None) -> None:
     for (workload, trace, side), c in sorted(correctness(records).items()):
         print(f"{workload} trace={trace} {side}: {c}")
     print(f"{'workload':<16} {'t':<2} {'metric':<48} {'parent median [q1, q3]':<32} "
-          f"{'change median [q1, q3]':<32} wins  gain")
-    for r in summarize(records, better):
+          f"{'change median [q1, q3]':<32} wins  gain verdict")
+    for r in summarize(records, better, bounds):
         parent = f"{r['parent_median']:.4g} [{r['parent_q1']:.4g}, {r['parent_q3']:.4g}]"
         change = f"{r['change_median']:.4g} [{r['change_q1']:.4g}, {r['change_q3']:.4g}]"
         print(f"{r['workload']:<16} {r['trace']:<2} {r['metric']:<48} {parent:<32} "
-              f"{change:<32} {r['wins']}/{r['pairs']:<3} {'yes' if r['gain'] else 'no'}")
+              f"{change:<32} {r['wins']}/{r['pairs']:<3} {'yes' if r['gain'] else 'no':<4} "
+              f"{r['verdict'] or '-'}")
 
 
-def benchmark_directions(root: str) -> dict[str, str]:
+def benchmark_metrics(root: str) -> tuple[dict[str, str], dict[str, float]]:
+    """Every metric's better direction, and each end-to-end metric's bound."""
     with open(os.path.join(root, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    return {m["name"]: m["better"]
-            for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+    end_to_end = bench.get("end_to_end", [])
+    better = {m["name"]: m["better"] for m in end_to_end + bench.get("per_layer", [])}
+    return better, {m["name"]: m["bound"] for m in end_to_end if "bound" in m}
 
 
 def extract_rev(root: str, rev: str, dest: str) -> None:
@@ -169,11 +200,11 @@ def main(argv: list[str] | None = None) -> int:
                     help="only print the summary of an existing JSONL file")
     args = ap.parse_args(argv)
     root = os.getcwd()
-    better = benchmark_directions(root)
+    better, bounds = benchmark_metrics(root)
 
     if args.summarize:
         with open(args.summarize) as f:
-            print_summary([json.loads(line) for line in f if line.strip()], better)
+            print_summary([json.loads(line) for line in f if line.strip()], better, bounds)
         return 0
     if not (args.parent and args.seeds and args.out):
         ap.error("--parent, --seeds and --out are required to run pairs")
@@ -204,7 +235,7 @@ def main(argv: list[str] | None = None) -> int:
                           file=sys.stderr, flush=True)
     finally:
         shutil.rmtree(parent_dir, ignore_errors=True)
-    print_summary(records, better)
+    print_summary(records, better, bounds)
     return 0
 
 
