@@ -72,11 +72,7 @@ class EngineConfig:
         default_factory=lambda: {t: f"mtt.{API_TYPE_NAMES[t]}.response" for t in API_TYPES}
     )
 
-    # JDBC / table-queue substrate
-    jdbc_url: str = ""
-    jdbc_user: str = ""
-    jdbc_password: str = ""
-    mysql_table_name: str = "async_inv_in"
+    # queue-database substrate (the connection comes from a ConnFactory)
     mysql_batch_size: int = 2000          # mysql.batch.size
     mysql_batch_interval_ms: int = 5000   # mysql.batch.interval.ms
     mysql_max_retries: int = 3            # mysql.max.retries
@@ -128,10 +124,6 @@ _KEY_MAP = {
     "kafka.sasl.user": "kafka_sasl_user",
     "kafka.sasl.password": "kafka_sasl_password",
     "kafka.starting.offsets": "kafka_starting_offsets",
-    "mysql.jdbc.url": "jdbc_url",
-    "mysql.user": "jdbc_user",
-    "mysql.password": "jdbc_password",
-    "mysql.table.name": "mysql_table_name",
     "mysql.batch.size": "mysql_batch_size",
     "mysql.batch.interval.ms": "mysql_batch_interval_ms",
     "mysql.max.retries": "mysql_max_retries",

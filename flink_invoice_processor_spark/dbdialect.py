@@ -103,20 +103,13 @@ DIALECTS = {d.name: d for d in (SQLITE, MYSQL)}
 
 
 class ConnFactory(Protocol):
-    """Picklable zero-arg callable returning a DBAPI connection, tagged
-    with the dialect its connections speak.  The sinks and the polls call
-    it on the driver; the ``table_queue`` reader calls it in a Python
-    worker, which is why it must pickle."""
+    """Zero-arg callable returning a DBAPI connection, tagged with the
+    dialect its connections speak.  The sinks and the polls call it on
+    the driver."""
 
     dialect: Dialect
 
     def __call__(self) -> Any: ...
-
-    def table_queue_options(self) -> dict[str, str]:
-        """The ``table_queue`` stream-source options that rebuild this
-        factory (``sources.stream``), so a streaming reader polls the
-        same database the factory's connections reach."""
-        ...
 
 
 def utcnow() -> datetime:
@@ -126,7 +119,7 @@ def utcnow() -> datetime:
 
 @dataclass(frozen=True)
 class MySQLConnFactory:
-    """Picklable MySQL connection factory (production twin of
+    """MySQL connection factory (production twin of
     ``SqliteConnFactory``).  Import-gated: neither PyMySQL nor
     mysql-connector ships in this container, so construction succeeds (it
     only stores parameters) and ``__call__`` raises ``ImportError`` with a
@@ -140,13 +133,6 @@ class MySQLConnFactory:
     password: str = field(repr=False)
     database: str
     port: int = 3306
-
-    def table_queue_options(self) -> dict[str, str]:
-        return {
-            "backend": "mysql", "host": self.host, "port": str(self.port),
-            "user": self.user, "password": self.password,
-            "database": self.database,
-        }
 
     def __call__(self):
         try:

@@ -64,12 +64,15 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..config import API_TYPES, EngineConfig, RETRY_JOB_RESPONSE
 from ..schemas import RESPONSE_ENVELOPE, RETRY_PAYLOAD_SUPERSET
-from ..streaming.dedup import DEDUP_KEY_COLS
 from .request import retry_create_rows, retry_outcome_rows
 
 #: Vietnamese success message, verbatim from the reference
 #: (InvoiceResponseItemFactory.java:32).
 SUCCESS_MESSAGE = "Tạo mới thành công"
+
+#: The reference's composite dedup key columns
+#: (InvoiceResponseRecordKeyGenerator.java:9-18).
+DEDUP_KEY_COLS = ["record_type", "id", "sid", "syncid"]
 
 RECORD_TYPE_INV_IN = "inv_in"
 RECORD_TYPE_INV_OUT = "inv_out"
@@ -99,11 +102,11 @@ def make_response_envelope(inv_in: DataFrame, inv_out: DataFrame) -> DataFrame:
 
 def dedup_records(df: DataFrame) -> DataFrame:
     """Reference K3: skip records whose composite key was already seen
-    (``InvoiceResponseBatchProcessor.java:110-121``).  Batch form: exact
-    dropDuplicates; streaming pipelines use streaming.dedup.streaming_dedup
-    (watermark-bounded dropDuplicatesWithinWatermark)
-    so state stays bounded (the reference's Set grows forever — a leak we
-    deliberately do not copy)."""
+    (``InvoiceResponseBatchProcessor.java:110-121``) with an exact
+    ``dropDuplicates`` inside one micro-batch.  No state spans batches
+    (the reference's Set grows forever — a leak not copied): the polls'
+    high-water marks never re-read a polled row, log-and-delete removes
+    processed rows, and the claim hides in-flight retry rows."""
     return df.dropDuplicates(DEDUP_KEY_COLS)
 
 

@@ -45,16 +45,14 @@ that dominated the engine's small micro-batches.  Writing from one Arrow
 collect instead cut the request job's CPU per 2,000-invoice op by about
 half (perfbench ``request_ingest`` ``op_cpu_p50_s``, median of ten runs on
 4 vCPUs: 4.4 to 2.0 CPU s).  Holding a micro-batch in the driver is safe
-because every micro-batch a sink receives is bounded: the polls and the
-``table_queue`` reader by ``mysql.fetch.size`` per table, the retry claim
-by ``retry.mysql.fetch.size``, and the Kafka request trigger by
+because every micro-batch a sink receives is bounded: the polls by
+``mysql.fetch.size`` per table, the retry claim by
+``retry.mysql.fetch.size``, and the Kafka request trigger by
 ``maxOffsetsPerTrigger`` (``streaming.kafka.kafka_reader_options``).
 
 ``conn_factory`` is a :class:`~..dbdialect.ConnFactory`
 (``SqliteConnFactory`` here, ``dbdialect.MySQLConnFactory`` for
-production).  The sinks call it on the driver; it stays picklable because
-the ``table_queue`` streaming reader (``sources.stream``) opens its
-connections in Python workers.
+production).  The sinks call it on the driver.
 """
 
 from __future__ import annotations
@@ -78,16 +76,12 @@ Statements = list[tuple[str, list[tuple]]]
 @dataclass(frozen=True)
 class SqliteConnFactory:
     """SQLite connection factory (tests / local stand-in for the
-    reference's MySQL).  A picklable class instead of a closure, so the
-    ``table_queue`` reader's Python workers can rebuild it by import."""
+    reference's MySQL)."""
 
     dialect = SQLITE
 
     path: str
     timeout: float = 30.0
-
-    def table_queue_options(self) -> dict[str, str]:
-        return {"backend": "sqlite", "db_path": self.path}
 
     def __call__(self):
         import sqlite3
@@ -175,16 +169,15 @@ def write_invoice_records(
     df: DataFrame,
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
-    table: str = "async_inv_in",
 ) -> None:
-    """W1: batched insert of INVOICE_MYSQL_RECORD rows.
+    """W1: batched insert of INVOICE_MYSQL_RECORD rows into ``async_inv_in``.
 
     All of ``df``'s rows are inserted in ``mysql.batch.size`` chunks inside
     one transaction (reference batch 2000 / flush 5000 ms / 3 retries,
     ``job/InvoiceRequest.java:144-148``; the flush interval is the
     micro-batch trigger in streaming mode).
     """
-    sql = conn_factory.dialect.insert_sql(table, INVOICE_INSERT_COLUMNS)
+    sql = conn_factory.dialect.insert_sql("async_inv_in", INVOICE_INSERT_COLUMNS)
     _write(
         df.select(INVOICE_INSERT_COLUMNS),
         conn_factory,

@@ -23,8 +23,17 @@ The predicate + LIMIT are pushed into the database exactly as the reference
 pushes them (hand-written WHERE — same place, same effect as Catalyst JDBC
 pushdown).  The high-water mark is returned to the caller, who persists it
 (the reference keeps it in memory only and loses it on restart —
-``AsyncInvInSource.java:35-49`` is commented out; our driver loop can
-checkpoint it, a strict upgrade).
+``AsyncInvInSource.java:35-49`` is commented out; the response driver
+loop, ``streaming.jobs.run_invoice_response_job``, checkpoints it).
+
+Visibility assumption (the reference makes the same one,
+``AsyncInvInSource.java:35-49``): ids become visible in commit order —
+one writer, or auto-committed inserts.  With CONCURRENT writers a
+transaction holding a lower id can commit AFTER a poll has advanced the
+high-water mark past it, and ``id > ?`` will then skip that row forever.
+Deployments with multi-writer queue tables should poll with a re-read
+lag window (``id > hwm - lag``) plus the downstream dedup, or switch the
+queue key to a commit-ordered sequence.
 
 The fetched rows reach Spark as one ``pyarrow.Table`` built against the
 Spark schema's Arrow schema, so each poll and claim plans as a JVM
@@ -62,8 +71,7 @@ from ..dbdialect import ConnFactory, utcnow
 from ..schemas import ASYNC_INV_IN_RECORD, ASYNC_INV_OUT_RECORD, INVOICE_RETRY_RECORD
 
 #: queue table → (schema, ready predicate): the reference's hand-written
-#: WHEREs (AsyncInvInSource.java:55, AsyncInvOutSource.java:55).  Shared
-#: with the ``table_queue`` streaming source.
+#: WHEREs (AsyncInvInSource.java:55, AsyncInvOutSource.java:55).
 QUEUE_TABLES = {
     "async_inv_in": (ASYNC_INV_IN_RECORD, "res_type = 2 AND state = 4"),
     "async_inv_out": (ASYNC_INV_OUT_RECORD, "res_type = 2 AND state = 0"),
@@ -99,39 +107,6 @@ def _local_frame(
     return spark.createDataFrame(table, schema)
 
 
-def fetch_ready_rows(
-    conn_factory: ConnFactory,
-    table: str,
-    after_id: int,
-    upto_id: int | None = None,
-    limit: int | None = None,
-) -> list[tuple]:
-    """A queue table's ready rows with ``after_id < id [<= upto_id]``, in
-    id order, coerced to the table's schema:
-    ``WHERE <ready> AND id > ? [AND id <= ?] ORDER BY id ASC [LIMIT n]``."""
-    schema, ready = QUEUE_TABLES[table]
-    q = conn_factory.dialect.placeholder
-    sql = (
-        f"SELECT {', '.join(f.name for f in schema.fields)} FROM {table} "
-        f"WHERE {ready} AND id > {q}"
-    )
-    params: tuple = (after_id,)
-    if upto_id is not None:
-        sql += f" AND id <= {q}"
-        params += (upto_id,)
-    sql += " ORDER BY id ASC"
-    if limit is not None:
-        sql += f" LIMIT {limit}"
-    conn = conn_factory()
-    try:
-        cur = conn.cursor()
-        cur.execute(sql, params)
-        rows = cur.fetchall()
-    finally:
-        conn.close()
-    return _coerce(rows, schema)
-
-
 def _poll_ready(
     spark: SparkSession,
     conn_factory: ConnFactory,
@@ -140,11 +115,23 @@ def _poll_ready(
     last_id: int,
 ) -> tuple[DataFrame, int]:
     """One poll of a queue table's ready rows past the id high-water mark,
-    at most ``mysql.fetch.size`` of them."""
+    at most ``mysql.fetch.size`` of them:
+    ``WHERE <ready> AND id > ? ORDER BY id ASC LIMIT n``."""
     cfg = cfg or EngineConfig()
-    rows = fetch_ready_rows(conn_factory, table, last_id, limit=cfg.mysql_fetch_size)
-    df = _local_frame(spark, rows, QUEUE_TABLES[table][0])
-    return df, max((r[0] for r in rows), default=last_id)
+    schema, ready = QUEUE_TABLES[table]
+    sql = (
+        f"SELECT {', '.join(f.name for f in schema.fields)} FROM {table} "
+        f"WHERE {ready} AND id > {conn_factory.dialect.placeholder} "
+        f"ORDER BY id ASC LIMIT {cfg.mysql_fetch_size}"
+    )
+    conn = conn_factory()
+    try:
+        cur = conn.cursor()
+        cur.execute(sql, (last_id,))
+        rows = _coerce(cur.fetchall(), schema)
+    finally:
+        conn.close()
+    return _local_frame(spark, rows, schema), max((r[0] for r in rows), default=last_id)
 
 
 def poll_async_inv_in(

@@ -13,18 +13,21 @@
   (``InvoiceResponseBatchProcessor.java:205-218`` — at-least-once with
   downstream dedup, not atomic).
 
-The response job has two entry points, the ``response_cycle`` driver loop
-and the ``run_invoice_response_stream_job`` Structured Streaming query.
-Both build an envelope and hand it to ``respond``, the one response
-micro-batch body: claim RESPONSE retries → transform → process → packet
-sink → log-and-delete → retry emissions.
+The response job has one entry point, the ``run_invoice_response_job``
+driver loop.  Each of its cycles is ``response_cycle``: poll both queue
+tables past the id high-water marks, build the envelope and hand it to
+``respond``, the micro-batch body: claim RESPONSE retries → transform →
+process → packet sink → log-and-delete → retry emissions.  The loop
+keeps the marks in its ``checkpoint_dir``, as the request job keeps its
+Kafka offsets in Spark's.
 
-Both jobs run as **micro-batch loops**: the streaming query's trigger (or
-the driver loop's poll interval) plays the role of the reference's
-processing-time timers; the batch envelope's count cap is enforced inside
-each micro-batch by ``assign_batch_seq``.  The strict per-key
-count-or-timeout batcher (``applyInPandasWithState``) lives in
-``streaming/batcher.py`` for users who need mid-interval flushes.
+The request job runs as a Structured Streaming micro-batch loop whose
+trigger plays the role of the reference's processing-time timers; the
+response loop's poll interval does the same.  The batch envelope's count
+cap is enforced inside each micro-batch by ``assign_batch_seq``.  The
+strict per-key count-or-timeout batcher (``applyInPandasWithState``)
+lives in ``streaming/batcher.py`` for users who need mid-interval
+flushes.
 
 Sinks are injected as callables so the same wiring runs against MySQL in
 production, SQLite in tests, and a collector in benchmarks.
@@ -32,9 +35,12 @@ production, SQLite in tests, and a collector in benchmarks.
 
 from __future__ import annotations
 
+import json
+import os
+import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig, RETRY_JOB_REQUEST, RETRY_JOB_RESPONSE
 from ..dbdialect import ConnFactory
@@ -54,9 +60,6 @@ from ..sources.dbapi import (
     poll_async_inv_out,
 )
 from .kafka import kafka_request_stream
-
-#: The stream job's cross-batch dedup horizon, measured from first arrival.
-DEDUP_DELAY = "10 minutes"
 
 
 def request_micro_batch(
@@ -109,19 +112,18 @@ def respond(
     cfg: EngineConfig,
     conn_factory: ConnFactory,
     packet_sink: Callable[[DataFrame], None],
-    lease_s: int,
 ) -> None:
     """The response job's one micro-batch body: claim due RESPONSE retries
     and union the recovered rows into ``envelope``, process, then sink.
 
-    ``lease_s`` is the claim's reap lease: a prior batch that died after
-    its claim committed but before its sinks ran leaves rows in
-    PROCESSING, where no later claim can see them; the reap revives them
-    once the lease expires.
+    The claim reaps with ``cfg.processing_lease_s``: a prior batch that
+    died after its claim committed but before its sinks ran leaves rows
+    in PROCESSING, where no later claim can see them; the reap revives
+    them once the lease expires.
     """
     claimed = claim_retry_batch(
         spark, conn_factory, RETRY_JOB_RESPONSE, cfg,
-        reap_processing_after_s=lease_s,
+        reap_processing_after_s=cfg.processing_lease_s,
     )
     recovered, retry_emits = transform_response_retry_records(claimed, cfg)
     result = process_response_batch(envelope.unionByName(recovered), cfg)
@@ -151,87 +153,35 @@ def response_cycle(
     inv_in, last_in_id = poll_async_inv_in(spark, conn_factory, cfg, last_in_id)
     inv_out, last_out_id = poll_async_inv_out(spark, conn_factory, cfg, last_out_id)
     envelope = make_response_envelope(inv_in, inv_out)
-    respond(spark, envelope, cfg, conn_factory, packet_sink, cfg.processing_lease_s)
+    respond(spark, envelope, cfg, conn_factory, packet_sink)
     return last_in_id, last_out_id
 
 
-def run_invoice_response_stream_job(
-    spark: SparkSession,
-    cfg: EngineConfig,
-    conn_factory: ConnFactory,
-    packet_sink: Callable[[DataFrame], None],
-    checkpoint_dir: str,
-    trigger_ms: int | None = None,
-):
-    """The response job as ONE Structured Streaming query: both queue
-    tables via the ``table_queue`` streaming source (offsets in the
-    checkpoint), watermark-bounded cross-batch dedup, then per micro-batch
-    the envelope pipeline + Kafka-then-DB sink ordering inside
-    ``foreachBatch``.
+#: The driver loop's high-water marks file inside its ``checkpoint_dir``.
+MARKS_FILE = "marks.json"
 
-    The queue reader and the sinks reach one database: the reader is
-    built from ``conn_factory.table_queue_options()``, so a
-    ``MySQLConnFactory`` deployment polls MySQL, not a SQLite file.  The
-    per-batch retry claim inside ``respond`` reaches Spark as an Arrow
-    ``LocalRelation`` (``sources.dbapi``), like the driver loop's polls.
 
-    This is the fully-streaming alternative to the ``response_cycle``
-    driver loop: same operators, but high-water marks and dedup state are
-    durable in the checkpoint, and the trigger interval plays the
-    reference's batch-timeout role (``InvoiceResponseBatchProcessor
-    .java:56``).  Returns the started ``StreamingQuery``.
-    """
-    from ..operators.response import make_response_envelope
-    from ..sources.stream import TableQueueDataSource
-    from .dedup import streaming_dedup
+def _load_marks(checkpoint_dir: str) -> tuple[int, int]:
+    """The (inv_in, inv_out) marks stored in ``checkpoint_dir``; (0, 0)
+    when there are none."""
+    try:
+        with open(os.path.join(checkpoint_dir, MARKS_FILE)) as f:
+            marks = json.load(f)
+    except FileNotFoundError:
+        return 0, 0
+    return marks["last_in_id"], marks["last_out_id"]
 
-    spark.dataSource.register(TableQueueDataSource)
 
-    def queue_stream(table: str) -> DataFrame:
-        return (
-            spark.readStream.format("table_queue")
-            .options(**conn_factory.table_queue_options())
-            .option("table", table)
-            .option("fetch_size", str(cfg.mysql_fetch_size))
-            .load()
-        )
-
-    envelope = make_response_envelope(
-        queue_stream("async_inv_in"), queue_stream("async_inv_out")
-    )
-    # Dedup on ARRIVAL time, not created_date: the two queue tables drain
-    # independently, and a backlogged table's rows can carry created_date
-    # hours behind the live table's — an event-time watermark would call
-    # them "late", silently drop them, and the source offset (already
-    # advanced) would never re-read them.  The per-micro-batch timestamp
-    # is monotone, so nothing is ever late, state stays bounded by the
-    # same delay, and the dedup horizon becomes "within `DEDUP_DELAY` of
-    # first ARRIVAL" — which is also closer to the reference's
-    # memory-lifetime dedup set than created_date ever was.
-    envelope = envelope.withColumn("_arrival_ts", F.current_timestamp())
-    deduped = streaming_dedup(envelope, "_arrival_ts", DEDUP_DELAY).drop(
-        "_arrival_ts"
-    )
-
-    trigger_ms = trigger_ms or cfg.response_batch_timeout_ms
-    # the lease must stay comfortably above THIS job's actual trigger
-    # beat — a caller-supplied trigger_ms can exceed every cfg interval
-    # the config-derived lease knows about, and a lease below one beat
-    # would let a concurrent claimer reap live claims mid-epoch
-    lease_s = max(cfg.processing_lease_s, 10 * trigger_ms // 1000)
-
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # claims due RESPONSE retries each batch, like `response_cycle`:
-        # without it, retry rows this job enqueues would sit PENDING
-        # forever in a stream-only deployment
-        respond(batch_df.sparkSession, batch_df, cfg, conn_factory, packet_sink, lease_s)
-
-    return (
-        deduped.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
-    )
+def _save_marks(checkpoint_dir: str, last_in: int, last_out: int) -> None:
+    """Replace the stored marks atomically: a reader sees the old file or
+    the new one, never a torn write."""
+    path = os.path.join(checkpoint_dir, MARKS_FILE)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump({"last_in_id": last_in, "last_out_id": last_out}, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 def run_invoice_response_job(
@@ -239,23 +189,38 @@ def run_invoice_response_job(
     cfg: EngineConfig,
     conn_factory: ConnFactory,
     packet_sink: Callable[[DataFrame], None],
+    checkpoint_dir: str,
     cycles: int | None = None,
     sleep_s: float | None = None,
 ) -> None:
     """Driver loop for the response job: poll → process → sink, advancing
-    the id high-water marks (the reference keeps them in memory too,
-    ``AsyncInvInSource.java:19``; persist externally for restart safety).
-    ``cycles=None`` loops forever; tests pass a small count."""
-    import time
+    the id high-water marks.  ``cycles=None`` loops forever; tests pass a
+    small count.
 
+    The reference keeps the marks in memory only (``AsyncInvInSource
+    .java:19``; its recovery helper at :35-49 is commented out), so a
+    restart re-polls the invalid rows that stay queued until their retry
+    resolves and enqueues a second CREATE retry row for each.  This loop
+    starts from the marks stored in ``checkpoint_dir`` and rewrites them
+    after each cycle that moved them, once that cycle's last commit (the
+    retry-queue sink) is done.  A crash therefore replays at most the one
+    cycle whose marks were not yet written.  Before its log-and-delete
+    commit that re-publishes its packets, as the reference's Kafka-first
+    order allows; after its retry-queue commit only its invalid rows are
+    still queued, and each gets one more CREATE row.
+    """
     if sleep_s is None:
         sleep_s = cfg.mysql_polling_interval_ms / 1000.0
-    last_in = last_out = 0
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    last_in, last_out = _load_marks(checkpoint_dir)
     n = 0
     while cycles is None or n < cycles:
-        last_in, last_out = response_cycle(
+        marks = response_cycle(
             spark, cfg, conn_factory, packet_sink, last_in, last_out
         )
+        if marks != (last_in, last_out):
+            last_in, last_out = marks
+            _save_marks(checkpoint_dir, last_in, last_out)
         n += 1
         if cycles is None or n < cycles:
             time.sleep(sleep_s)

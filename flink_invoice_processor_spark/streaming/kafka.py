@@ -117,25 +117,14 @@ def kafka_request_stream(spark: SparkSession, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def write_packets_to_kafka(
-    packets: DataFrame, cfg: EngineConfig, checkpoint_dir: str
-):
-    """writeStream for assembled response packets: one sink, routed by the
-    per-row ``topic`` column (replaces the reference's five sinks)."""
-    writer = (
-        packets.selectExpr("topic", "packet_json AS value")
-        .writeStream.format("kafka")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    for k, v in kafka_writer_options(cfg).items():
-        writer = writer.option(k, v)
-    return writer.start()
-
-
 def write_packets_batch_to_kafka(
     packets: DataFrame, cfg: EngineConfig
 ) -> None:
-    """Batch-mode Kafka write for use inside foreachBatch."""
+    """The response loop's Kafka ``packet_sink`` (W2): one batch write of
+    a cycle's assembled packets, routed by the per-row ``topic`` column
+    (replaces the reference's five sinks).  Bind ``cfg`` to pass it to
+    ``run_invoice_response_job``, e.g.
+    ``lambda df: write_packets_batch_to_kafka(df, cfg)``."""
     writer = packets.selectExpr("topic", "packet_json AS value").write.format(
         "kafka"
     )

@@ -30,8 +30,8 @@ handful of recent-hour partitions; untouched history is never rewritten.
 
 The per-batch recompute joins the BATCH's touched keys against the BASE
 table accumulated so far — state lives in the base table, not in memory,
-so the job restarts stateless (cf. the reference's in-memory HWM fixed in
-``sources/stream.py``).
+so the job restarts stateless (cf. the reference's in-memory HWM, which
+the response driver loop keeps in its checkpoint).
 """
 
 from __future__ import annotations

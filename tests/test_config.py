@@ -45,3 +45,28 @@ def test_cli_only_and_int_coercion():
     cfg = load_config(None, ["--retry.mysql.fetch.size=5"])
     assert cfg.retry_fetch_size == 5
     assert isinstance(cfg.retry_fetch_size, int)
+
+
+def test_retired_connection_keys_still_load(tmp_path):
+    """The connection comes from a ``ConnFactory``, so the reference's
+    JDBC keys set nothing; a properties file that still carries them
+    loads, and every other value is as it would be without them."""
+    body = (
+        "mysql.batch.size = 500\n"
+        "response.batch.size=42\n"
+        "kafka.bootstrap = broker:9092\n"
+    )
+    legacy = (
+        "mysql.jdbc.url = jdbc:mysql://db.example.internal:3306/invoices\n"
+        "mysql.user = u\n"
+        "mysql.password = pw\n"
+        "mysql.table.name = async_inv_in\n"
+    )
+    plain, old = tmp_path / "plain.properties", tmp_path / "old.properties"
+    plain.write_text(body)
+    old.write_text(legacy + body)
+    cfg = load_config(old)
+    assert cfg == load_config(plain)
+    assert cfg.mysql_batch_size == 500
+    assert cfg.response_batch_size == 42
+    assert cfg.kafka_bootstrap == "broker:9092"

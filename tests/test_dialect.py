@@ -179,45 +179,6 @@ def test_mysql_conn_factory_is_import_gated():
         factory()
 
 
-def test_table_queue_mysql_backend_wires_factory():
-    from flink_invoice_processor_spark.sources.stream import (
-        TableQueueStreamReader,
-    )
-
-    r = TableQueueStreamReader(
-        {
-            "backend": "mysql",
-            "host": "db.example.internal",
-            "user": "u",
-            "password": "",
-            "database": "invoices",
-            "table": "async_inv_out",
-        }
-    )
-    assert r.conn_factory.dialect.placeholder == "%s"
-    assert isinstance(r.conn_factory, MySQLConnFactory)
-    with pytest.raises(ImportError):
-        r.conn_factory()
-
-
-def test_factories_round_trip_through_table_queue_options(tmp_path):
-    """The streaming response job builds its ``table_queue`` reader from
-    the factory's options, so the reader must rebuild an equal factory:
-    a MySQL deployment polls MySQL, with its port, not a SQLite file."""
-    from flink_invoice_processor_spark.sinks.dbapi import SqliteConnFactory
-    from flink_invoice_processor_spark.sources.stream import (
-        TableQueueStreamReader,
-    )
-
-    for factory in (
-        MySQLConnFactory("db.example.internal", "u", "pw", "invoices", port=3307),
-        SqliteConnFactory(str(tmp_path / "engine.db")),
-    ):
-        options = {**factory.table_queue_options(), "table": "async_inv_out"}
-        assert all(isinstance(v, str) for v in options.values())
-        assert TableQueueStreamReader(options).conn_factory == factory
-
-
 def test_mysql_reap_uses_db_clock(spark, tmp_path):
     """The stale-claim sweep must compare in the SAME clock domain the
     claim stamped: under MYSQL the lease start is CURRENT_TIMESTAMP, so

@@ -1,93 +1,18 @@
-"""End-to-end fully-streaming response job: table_queue sources → envelope →
-cross-batch dedup → batch/assemble/route → Kafka-equivalent sink then
-transactional log-and-delete, all inside one Structured Streaming query."""
+"""The response job's one micro-batch body, end to end on a SQLite queue:
+``response_cycle`` polls both queue tables, claims due RESPONSE retries,
+assembles and routes packets, then log-and-deletes and enqueues failures."""
 
 from __future__ import annotations
 
 import json
 import sqlite3
-import time
 
 from flink_invoice_processor_spark.config import EngineConfig
 from flink_invoice_processor_spark.sinks.dbapi import SqliteConnFactory
-from flink_invoice_processor_spark.streaming.jobs import (
-    response_cycle,
-    run_invoice_response_stream_job,
-)
+from flink_invoice_processor_spark.streaming.jobs import response_cycle
 
 from test_sinks_sources import DDL
 
-CFG = EngineConfig()
-
-
-def test_streaming_response_end_to_end(spark, tmp_path):
-    db_path = str(tmp_path / "engine.db")
-    conn = sqlite3.connect(db_path)
-    for ddl in DDL:
-        conn.execute(ddl)
-    # two completed fpt rows + one gdt row, all ready for the response job
-    conn.execute(
-        "INSERT INTO async_inv_in (tax_schema, inv, api_type, res_type, "
-        "fpt_einvoice_res_code, fpt_einvoice_res_json, retry, state, group_id, "
-        "created_date, sid, syncid) VALUES "
-        "('111', '{}', 10, 2, '200', '{\"ok\":1}', 0, 4, 0, '2026-01-01 00:00:01', 'S-1', 'Y-1'), "
-        "('222', '{}', 11, 2, '200', '{\"ok\":2}', 0, 4, 1, '2026-01-01 00:00:02', 'S-2', 'Y-2')"
-    )
-    conn.execute(
-        "INSERT INTO async_inv_out (tax_schema, gdt_res, sid, syncid, retry, "
-        "state, group_id, res_type, api_type, created_date) "
-        "VALUES ('333', '{\"gdt\":2}', 'S-9', 'Y-9', 0, 0, 0, 2, 10, "
-        "'2026-01-01 00:00:03')"
-    )
-    conn.commit()
-    conn.close()
-
-    factory = SqliteConnFactory(db_path)
-    collected = []
-
-    def packet_sink(packets_df):
-        collected.extend(packets_df.collect())
-
-    def succ_count():
-        conn = sqlite3.connect(db_path)
-        try:
-            return conn.execute(
-                "SELECT count(*) FROM async_inv_succ_log"
-            ).fetchone()[0]
-        finally:
-            conn.close()
-
-    q = run_invoice_response_stream_job(
-        spark, CFG, factory, packet_sink,
-        str(tmp_path / "ckpt"), trigger_ms=300,
-    )
-    try:
-        # wait for the END of the batch (the DB transaction), not just the
-        # packet sink — stopping mid-batch interrupts the log-and-delete
-        deadline = time.time() + 90
-        while time.time() < deadline and succ_count() < 3:
-            time.sleep(0.5)
-    finally:
-        q.stop()
-
-    by_topic = {r.topic: json.loads(r.packet_json) for r in collected}
-    crt = by_topic["mtt.crt.response"]["inv_pack_res"]
-    assert {i["sid"] for i in crt} == {"S-1", "S-9"}  # fpt + gdt, same envelope
-    assert next(i for i in crt if i["sid"] == "S-1")["status"] == "success"
-    assert next(i for i in crt if i["sid"] == "S-9")["res_resource"] == "gdt"
-    assert [i["sid"] for i in by_topic["mtt.upd.response"]["inv_pack_res"]] == ["S-2"]
-
-    # log-and-delete ran transactionally: success log filled, sources drained
-    conn = sqlite3.connect(db_path)
-    assert {r[0] for r in conn.execute("SELECT sid FROM async_inv_succ_log")} == {
-        "S-1", "S-2", "S-9"
-    }
-    assert conn.execute("SELECT count(*) FROM async_inv_in").fetchone()[0] == 0
-    assert conn.execute("SELECT count(*) FROM async_inv_out").fetchone()[0] == 0
-    conn.close()
-
-
-# -- parity of the two response entry points -----------------------------------
 
 #: failures wait an hour, so the CREATE row the run enqueues never comes due
 PARITY_CFG = EngineConfig(app_retry_interval_ms=3_600_000)
@@ -154,48 +79,24 @@ def _end_state(db_path: str, packets) -> dict:
 
 
 def test_response_entry_points_share_one_body(spark, tmp_path):
-    """``response_cycle`` and the stream job leave the same packets and
-    queue end state, retry claims included."""
-    loop_db = str(tmp_path / "loop.db")
-    _seed_queue(loop_db)
-    loop_packets = []
+    """``response_cycle``, the one response body every entry point runs,
+    leaves the right packets and queue end state, retry claims included."""
+    db = str(tmp_path / "loop.db")
+    _seed_queue(db)
+    packets = []
     response_cycle(
-        spark, PARITY_CFG, SqliteConnFactory(loop_db),
-        lambda df: loop_packets.extend(df.collect()),
+        spark, PARITY_CFG, SqliteConnFactory(db),
+        lambda df: packets.extend(df.collect()),
     )
-    loop = _end_state(loop_db, loop_packets)
+    state = _end_state(db, packets)
 
-    stream_db = str(tmp_path / "stream.db")
-    _seed_queue(stream_db)
-    stream_packets = []
-
-    def settled() -> bool:
-        # the retry sink is the batch's last write: the dead row has been
-        # dead-lettered and only the null-gdt_res CREATE row is left
-        state = _end_state(stream_db, [])
-        return len(state["error_log"]) == 1 and [r[0] for r in state["retry"]] == ["S-N"]
-
-    q = run_invoice_response_stream_job(
-        spark, PARITY_CFG, SqliteConnFactory(stream_db),
-        lambda df: stream_packets.extend(df.collect()),
-        str(tmp_path / "ckpt"), trigger_ms=300,
-    )
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline and not settled():
-            time.sleep(0.5)
-    finally:
-        q.stop()
-
-    assert _end_state(stream_db, stream_packets) == loop
-    # and the shared end state is the right one
-    assert loop["packets"] == [
+    assert state["packets"] == [
         ("mtt.crt.response", ["S-1", "S-9"]),
         ("mtt.del.response", ["S-R"]),
         ("mtt.upd.response", ["S-2"]),
     ]
-    assert loop["succ_log"] == ["S-1", "S-2", "S-9", "S-R"]
-    assert [(r[0], r[4], r[7]) for r in loop["retry"]] == [
+    assert state["succ_log"] == ["S-1", "S-2", "S-9", "S-R"]
+    assert [(r[0], r[4], r[7]) for r in state["retry"]] == [
         ("S-N", "gdt_res is null", "PENDING")
     ]
-    assert [r[0] for r in loop["error_log"]] == ["S-D"]
+    assert [r[0] for r in state["error_log"]] == ["S-D"]

@@ -1,7 +1,8 @@
 """End-to-end pipeline test: packets flow through the streaming request job
-into the table-queue substrate, the simulated external service responds, and
-the response job assembles/routes packets and log-and-deletes — the full
-lifecycle of the two reference jobs on a SQLite stand-in."""
+into the queue tables, the simulated external service responds, and the
+response job assembles/routes packets and log-and-deletes — the full
+lifecycle of the two reference jobs on a SQLite stand-in.  Both jobs
+restart from their checkpoint without replaying committed work."""
 
 from __future__ import annotations
 
@@ -13,8 +14,10 @@ import pytest
 from flink_invoice_processor_spark.config import EngineConfig
 from flink_invoice_processor_spark.sinks.dbapi import SqliteConnFactory
 from flink_invoice_processor_spark.streaming.jobs import (
+    MARKS_FILE,
     response_cycle,
     run_invoice_request_job,
+    run_invoice_response_job,
 )
 
 from test_sinks_sources import DDL
@@ -139,3 +142,79 @@ def test_request_job_replay_safety(spark, db, tmp_path):
     query2.processAllAvailable()
     query2.stop()
     assert q(db, "SELECT count(*) FROM async_inv_in") == [(1,)]
+
+
+#: failures wait an hour, so no CREATE row comes due between two runs
+HOUR_CFG = EngineConfig(app_retry_interval_ms=3_600_000)
+
+
+def insert_inv_out(factory, *rows):
+    """Ready ``async_inv_out`` rows from ``(sid, gdt_res)`` pairs."""
+    conn = factory()
+    conn.executemany(
+        "INSERT INTO async_inv_out (tax_schema, gdt_res, sid, syncid, retry, "
+        "state, group_id, res_type, api_type, created_date) "
+        "VALUES ('333', ?, ?, ?, 0, 0, 0, 2, 10, '2026-01-01 00:00:03')",
+        [(gdt, sid, f"Y-{sid}") for sid, gdt in rows],
+    )
+    conn.commit()
+    conn.close()
+
+
+def test_response_job_restart_does_not_reenqueue(spark, db, tmp_path):
+    """A restart over the same checkpoint resumes past the polled rows:
+    the invalid row that stays queued for its retry is not polled again,
+    so it gets one CREATE retry row, not one per run."""
+    insert_inv_out(db, ("S-1", '{"gdt":1}'), ("S-N", None))
+    ckpt = str(tmp_path / "response-ckpt")
+    runs = []
+    for _ in range(2):
+        packets = []
+        run_invoice_response_job(
+            spark, HOUR_CFG, db, lambda df: packets.extend(df.collect()),
+            ckpt, cycles=1,
+        )
+        runs.append(packets)
+
+    first, second = runs
+    assert [[i["sid"] for i in json.loads(p.packet_json)["inv_pack_res"]]
+            for p in first] == [["S-1"]]
+    assert second == []
+    assert q(db, "SELECT sid FROM async_inv_succ_log") == [("S-1",)]
+    assert q(db, "SELECT sid, job, retry_count, state, error_message "
+                 "FROM invoice_retry") == [
+        ("S-N", "RESPONSE", 0, "PENDING", "gdt_res is null")
+    ]
+
+
+def test_response_job_failed_cycle_keeps_marks(spark, db, tmp_path):
+    """A cycle that raises before its last commit leaves the stored marks
+    as they were, so the next run polls, publishes and logs its rows."""
+    ckpt = tmp_path / "response-ckpt"
+    insert_inv_out(db, ("S-1", '{"gdt":1}'))
+    run_invoice_response_job(spark, HOUR_CFG, db, lambda df: df.collect(),
+                             str(ckpt), cycles=1)
+    marks = (ckpt / MARKS_FILE).read_bytes()
+
+    insert_inv_out(db, ("S-2", '{"gdt":2}'))
+
+    def broken_sink(df):
+        raise RuntimeError("broker down")
+
+    with pytest.raises(RuntimeError, match="broker down"):
+        run_invoice_response_job(spark, HOUR_CFG, db, broken_sink,
+                                 str(ckpt), cycles=1)
+    assert (ckpt / MARKS_FILE).read_bytes() == marks
+    assert q(db, "SELECT sid FROM async_inv_succ_log") == [("S-1",)]
+
+    packets = []
+    run_invoice_response_job(spark, HOUR_CFG, db,
+                             lambda df: packets.extend(df.collect()),
+                             str(ckpt), cycles=1)
+    assert [[i["sid"] for i in json.loads(p.packet_json)["inv_pack_res"]]
+            for p in packets] == [["S-2"]]
+    assert q(db, "SELECT sid FROM async_inv_succ_log ORDER BY sid") == [
+        ("S-1",), ("S-2",)
+    ]
+    assert q(db, "SELECT count(*) FROM async_inv_out") == [(0,)]
+    assert (ckpt / MARKS_FILE).read_bytes() != marks
