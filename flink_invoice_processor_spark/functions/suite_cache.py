@@ -29,12 +29,21 @@ entries are plain checkpointed DataFrames; dropping the dict on
 
 from __future__ import annotations
 
+import threading
 import time
 from typing import Callable
 
 from pyspark.sql import DataFrame
 
 _CACHE: dict | None = None
+
+
+class _BuildStack(threading.local):
+    """A build-nesting stack per thread (see ``_BUILD_STACK``)."""
+
+    def __init__(self):
+        self.frames: list[float] = []
+
 
 #: Build-nesting stack (r14): a builder may itself resolve another memo
 #: (the tight simhash pairs build the shared signature inside their
@@ -45,7 +54,10 @@ _CACHE: dict | None = None
 #: ``kcore_docs`` in the first r14 bench.  Each frame accumulates its
 #: children's wall-clock; a parent's recorded build time is its elapsed
 #: MINUS its children's, so the ledger sums to true total build seconds.
-_BUILD_STACK: list[float] = []
+#: The stack is per thread: a nested build only ever runs on its parent's
+#: thread, and two driver threads resolving memos at once would otherwise
+#: pop and charge each other's frames.
+_BUILD_STACK = _BuildStack()
 
 #: The artifact-scale registry (VERDICT r13 item 6 — the sharing rule
 #: enforced in code, not prose).  Every label that may be cached in a
@@ -154,15 +166,16 @@ def _timed_build(key: tuple, builder: Callable):
     the true total and nothing is double-counted.  A failed build
     records no entry (unchanged from r13) but still charges its seconds
     to the enclosing frame — they are real seconds the parent spent."""
-    _BUILD_STACK.append(0.0)
+    stack = _BUILD_STACK.frames
+    stack.append(0.0)
     t0 = time.perf_counter()
     try:
         val = builder()
     finally:
         elapsed = time.perf_counter() - t0
-        children = _BUILD_STACK.pop()
-        if _BUILD_STACK:
-            _BUILD_STACK[-1] += elapsed
+        children = stack.pop()
+        if stack:
+            stack[-1] += elapsed
     _BUILD_TIMES[_key_label(key)] = round(max(elapsed - children, 0.0), 3)
     return val
 

@@ -5,8 +5,9 @@ Re-expresses the reference's keyed stateful processor
 (``process/response/InvoiceResponseBatchProcessor.java``) and its helpers
 (``InvoiceResponseItemFactory.java``, ``InvoiceResponseKafkaRouter.java``,
 ``InvoiceResponseRecordKeyGenerator.java``) as pure DataFrame transforms.
-The count-or-timeout *timing* lives in the streaming wrapper (micro-batch
-trigger); everything per-batch is here and batch-testable.
+The count-or-timeout *timing* lives in the response driver loop's poll
+interval (``streaming.jobs.run_invoice_response_job``); everything
+per-batch is here and batch-testable.
 
 Semantics preserved (cited to the reference):
 
@@ -49,11 +50,17 @@ Semantics preserved (cited to the reference):
   keys, so sniffing uses ``json_object_keys``.
 - retry whitelist (``:285``): api_type ∉ {10..14} ⇒ "Unknown api_type: N".
 
-Scale notes: the only shuffle in this file is the per-api_type window for
-``batch_seq`` (5 hot keys).  At cluster scale the streaming wrapper batches
-per micro-batch instead, and the window runs *within* each micro-batch whose
-size is bounded by ``maxOffsetsPerTrigger``-style source caps, so the skew
-is bounded; AQE skew-join/partition handling covers the batch path.
+Scale notes: three transforms here need rows clustered by key: the dedup
+(``DEDUP_KEY_COLS``), the per-api_type ``batch_seq`` window (5 hot keys)
+and the packet ``groupBy("api_type", "batch_seq")``.  Over a
+multi-partition input each plans a shuffle.  The transforms stay general;
+the caller picks the partitioning.  The response job
+(``streaming.jobs.respond``) hands them a micro-batch bounded by the polls'
+``mysql.fetch.size`` and the claim's ``retry.mysql.fetch.size``, coalesced
+to one partition, which satisfies every clustered distribution, so none of
+the three shuffles.  A caller with an unbounded input keeps the shuffles;
+AQE's partition coalescing and skew handling then cover the window's
+skew.
 """
 
 from __future__ import annotations

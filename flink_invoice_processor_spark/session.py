@@ -28,6 +28,18 @@ def get_spark(
       rides Arrow batches.
     - UTC session timezone: timestamps must compare equal between Spark
       and DuckDB (which is UTC-naive).
+    - DataFrame debugging off (``spark.python.sql.dataFrameDebugging
+      .enabled=false``).  With it on, PySpark wraps every ``Column`` and
+      ``DataFrame`` call to record its Python call site: an active-session
+      lookup, a conf read, an ``inspect`` stack walk and a JVM origin set
+      and clear, about five extra py4j round trips per call.  The
+      response job's plan building makes about a thousand such calls per
+      micro-batch: with the capture off, a perfbench ``response_drain``
+      op sends about 2,300 py4j commands instead of 5,600.
+      The price: Spark error messages no longer carry the Python
+      file:line of the DataFrame call that built the failing expression.
+      PySpark reads the setting once per process, from the first active
+      session that asks.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -44,6 +56,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         # the synthetic events table carries timestamp[ns]; read as long and

@@ -40,9 +40,9 @@ Spark schema's Arrow schema, so each poll and claim plans as a JVM
 ``LocalRelation``.  Two reasons:
 
 - Cost.  ``createDataFrame`` on a Python list plans a ``LogicalRDD`` over
-  a Python RDD, and every Spark job that scans it (up to seven per
-  response micro-batch: each sink re-executes the plan) runs Python-worker
-  tasks that re-pickle the rows.  A ``LocalRelation`` is scanned in the
+  a Python RDD, and every Spark job that scans it (three per response
+  micro-batch: each sink re-executes the plan) runs Python-worker tasks
+  that re-pickle the rows.  A ``LocalRelation`` is scanned in the
   JVM, at no Python-worker cost.
 - Time zone.  The list path reads a naive ``datetime`` through
   ``TimestampType.toInternal`` (``time.mktime``), i.e. in the host's time

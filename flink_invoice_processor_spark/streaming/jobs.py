@@ -120,19 +120,31 @@ def respond(
     died after its claim committed but before its sinks ran leaves rows
     in PROCESSING, where no later claim can see them; the reap revives
     them once the lease expires.
+
+    The batch runs in one partition.  It is bounded: the polls return at
+    most ``mysql.fetch.size`` rows each and the claim at most
+    ``retry.mysql.fetch.size``, and the sinks hold it in the driver
+    anyway.  One partition satisfies every clustered distribution, so the
+    dedup, the ``api_type`` window and the packet ``groupBy`` plan with no
+    shuffle.  The retry emissions, which also carry the claim's outcome
+    rows, are coalesced too, so each sink runs one single-task job.  The
+    dedup then keeps the polled row over a recovered duplicate, where a
+    hash shuffle kept whichever it delivered first.
     """
     claimed = claim_retry_batch(
         spark, conn_factory, RETRY_JOB_RESPONSE, cfg,
         reap_processing_after_s=cfg.processing_lease_s,
     )
     recovered, retry_emits = transform_response_retry_records(claimed, cfg)
-    result = process_response_batch(envelope.unionByName(recovered), cfg)
+    batch = envelope.unionByName(recovered).coalesce(1)
+    result = process_response_batch(batch, cfg)
 
     # Step 1: Kafka first, Step 2: DB transaction — the reference's ordering
     # (InvoiceResponseBatchProcessor.java:205-218)
     packet_sink(result.packets)
     write_log_and_delete(result.db_ops, conn_factory, cfg)
-    write_retry_emissions(result.retry.unionByName(retry_emits), conn_factory, cfg)
+    retry = result.retry.unionByName(retry_emits).coalesce(1)
+    write_retry_emissions(retry, conn_factory, cfg)
 
 
 def response_cycle(
@@ -195,7 +207,9 @@ def run_invoice_response_job(
 ) -> None:
     """Driver loop for the response job: poll → process → sink, advancing
     the id high-water marks.  ``cycles=None`` loops forever; tests pass a
-    small count.
+    small count.  The loop sleeps ``sleep_s`` (default
+    ``mysql.polling.interval.ms``) only after a cycle whose polls found
+    no new rows; after one that moved the marks it polls again at once.
 
     The reference keeps the marks in memory only (``AsyncInvInSource
     .java:19``; its recovery helper at :35-49 is commented out), so a
@@ -218,9 +232,11 @@ def run_invoice_response_job(
         marks = response_cycle(
             spark, cfg, conn_factory, packet_sink, last_in, last_out
         )
-        if marks != (last_in, last_out):
+        idle = marks == (last_in, last_out)
+        if not idle:
             last_in, last_out = marks
             _save_marks(checkpoint_dir, last_in, last_out)
         n += 1
-        if cycles is None or n < cycles:
+        # a cycle that polled rows may have left a backlog: poll again now
+        if idle and (cycles is None or n < cycles):
             time.sleep(sleep_s)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import sqlite3
+import uuid
 
 from flink_invoice_processor_spark.config import EngineConfig
 from flink_invoice_processor_spark.sinks.dbapi import SqliteConnFactory
@@ -100,3 +101,71 @@ def test_response_entry_points_share_one_body(spark, tmp_path):
         ("S-N", "gdt_res is null", "PENDING")
     ]
     assert [r[0] for r in state["error_log"]] == ["S-D"]
+
+
+def test_response_cycle_runs_one_single_task_job_per_sink(spark, tmp_path):
+    """The micro-batch runs in one partition: the dedup, the api_type
+    window and the packet groupBy plan no shuffle, so a cycle runs one
+    Spark job per sink action, three in all, and the frame the packet
+    sink gets has no Exchange.  The session does no call-site capture."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    db = str(tmp_path / "jobs.db")
+    _seed_queue(db)
+    plans = []
+
+    def packet_sink(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        df.collect()
+
+    sc = spark.sparkContext
+    group = f"response-cycle-{uuid.uuid4()}"
+    sc.setJobGroup(group, "response_cycle")
+    try:
+        response_cycle(spark, PARITY_CFG, SqliteConnFactory(db), packet_sink)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker learns of jobs through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+
+    assert len(jobs) == 3
+    assert all(tracker.getStageInfo(s).numTasks == 1 for j in jobs for s in j.stageIds)
+    assert len(plans) == 1 and "Exchange" not in plans[0], plans
+
+
+def test_dedup_keeps_the_polled_row_over_a_recovered_duplicate(spark, tmp_path):
+    """A recovered retry row with the dedup key of a polled row is dropped
+    in favour of the polled one: the one-partition batch holds the polled
+    rows first, so the dedup no longer depends on hash-shuffle order."""
+    db = str(tmp_path / "dup.db")
+    conn = sqlite3.connect(db)
+    for ddl in DDL:
+        conn.execute(ddl)
+    conn.execute(
+        "INSERT INTO async_inv_out (tax_schema, gdt_res, sid, syncid, retry, "
+        "state, group_id, res_type, api_type, created_date) VALUES "
+        "('333', '{\"gdt\":\"polled\"}', 'S-9', 'Y-9', 0, 0, 0, 2, 10, "
+        "'2026-01-01 00:00:03')"
+    )
+    stale = json.dumps({
+        "id": 1, "tax_schema": "333", "api_type": 10, "res_type": 2,
+        "gdt_res": '{"gdt":"recovered"}', "retry": 0, "state": 0,
+        "group_id": 0, "sid": "S-9", "syncid": "Y-9",
+    })
+    conn.execute(
+        "INSERT INTO invoice_retry (sid, syncid, job, payload, error_message, "
+        "error_code, retry_count, state, next_retry_time, created_at) "
+        "VALUES ('S-9', 'Y-9', 'RESPONSE', ?, 'old', 'Exception', 1, 'PENDING', "
+        "'2026-01-01 00:00:00', '2026-01-01 00:00:00')",
+        (stale,),
+    )
+    conn.commit()
+    conn.close()
+    packets = []
+    response_cycle(spark, PARITY_CFG, SqliteConnFactory(db),
+                   lambda df: packets.extend(df.collect()))
+
+    items = [i for p in packets for i in json.loads(p.packet_json)["inv_pack_res"]]
+    assert [(i["sid"], i["data"]) for i in items] == [("S-9", {"gdt": "polled"})]
+    assert _end_state(db, packets)["succ_log"] == ["S-9"]

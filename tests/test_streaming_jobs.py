@@ -218,3 +218,23 @@ def test_response_job_failed_cycle_keeps_marks(spark, db, tmp_path):
     ]
     assert q(db, "SELECT count(*) FROM async_inv_out") == [(0,)]
     assert (ckpt / MARKS_FILE).read_bytes() != marks
+
+
+def test_response_job_sleeps_only_after_idle_cycles(spark, db, tmp_path, monkeypatch):
+    """A cycle that moved the marks may have left a backlog, so the loop
+    polls again at once; it sleeps the poll interval only after a cycle
+    that found no new rows, and not after its last cycle."""
+    from types import SimpleNamespace
+
+    from flink_invoice_processor_spark.streaming import jobs
+
+    sleeps = []
+    monkeypatch.setattr(jobs, "time", SimpleNamespace(sleep=sleeps.append))
+    insert_inv_out(db, ("S-1", '{"gdt":1}'), ("S-2", '{"gdt":2}'))
+    # cycle 1 polls both rows, cycle 2 finds none and sleeps, cycle 3 is last
+    run_invoice_response_job(spark, HOUR_CFG, db, lambda df: df.collect(),
+                             str(tmp_path / "response-ckpt"), cycles=3)
+    assert sleeps == [HOUR_CFG.mysql_polling_interval_ms / 1000.0]
+    assert q(db, "SELECT sid FROM async_inv_succ_log ORDER BY sid") == [
+        ("S-1",), ("S-2",)
+    ]

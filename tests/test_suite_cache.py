@@ -4,6 +4,8 @@ bit-identical to standalone execution."""
 
 from __future__ import annotations
 
+import threading
+
 from flink_invoice_processor_spark.functions import suite_cache as SC
 
 
@@ -58,6 +60,67 @@ def test_nested_memo_builds_are_not_double_counted():
     assert 0.04 <= built["simhash_sig:32"] < 0.1
     assert 0.04 <= built["simhash_pairs:32:3"] < 0.1
     assert built["simhash_sig:32"] + built["simhash_pairs:32:3"] < 0.18
+
+
+class _ThreadClock:
+    """A ``time`` stand-in whose ``perf_counter`` is a per-thread virtual
+    clock that only ``work`` advances, so build times are exact."""
+
+    def __init__(self):
+        self._local = threading.local()
+
+    def perf_counter(self) -> float:
+        return getattr(self._local, "t", 0.0)
+
+    def work(self, seconds: float) -> None:
+        self._local.t = self.perf_counter() + seconds
+
+
+def test_nested_memo_builds_on_two_threads_are_timed_apart(monkeypatch):
+    """Two driver threads build nested memos at once: each artifact's
+    build time is recorded once, in its own entry.  The barriers hold
+    both parents' and both children's build frames open together, which
+    a build stack shared between threads pops and charges crosswise."""
+    clock = _ThreadClock()
+    monkeypatch.setattr(SC, "time", clock)
+    parents_open = threading.Barrier(2, timeout=30)
+    children_open = threading.Barrier(2, timeout=30)
+    errors = []
+
+    def child():
+        children_open.wait()
+        clock.work(1.0)
+        return "sig"
+
+    def parent(width):
+        def build():
+            clock.work(2.0)
+            parents_open.wait()
+            return SC.memo(("simhash_sig", width), child) + ":pairs"
+        return build
+
+    def run(width):
+        try:
+            assert SC.memo(("simhash_pairs", width, 3), parent(width)) == "sig:pairs"
+        except Exception as e:  # surfaced by the main thread below
+            errors.append(e)
+
+    SC.enable()
+    try:
+        threads = [threading.Thread(target=run, args=(w,)) for w in (32, 64)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        built = SC.drain_build_times()
+    finally:
+        SC.disable()
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert built == {
+        "simhash_sig:32": 1.0, "simhash_pairs:32:3": 2.0,
+        "simhash_sig:64": 1.0, "simhash_pairs:64:3": 2.0,
+    }
 
 
 def test_unregistered_artifact_label_refused():
