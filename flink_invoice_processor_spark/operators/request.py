@@ -41,6 +41,25 @@ Semantics preserved (cited to the reference):
   payload surfaces as error_code ``JsonParseException`` (Jackson's throw at
   ``:120``).
 
+Output shape: both transforms return one tagged frame (``REQUEST_OUTPUT``)
+with one row per packet element or claimed retry row and two struct
+columns: ``record``, the ``async_inv_in`` row it yields, and
+``emission``, the retry-queue row it yields.  A packet element sets
+exactly one of them; a claimed row always sets ``emission`` and sets
+``record`` too when its payload now passes.  The request job unions the
+two frames and collects them once, so one Spark job parses each packet
+once for both sinks (a split into two frames would run the parse and
+explode again for the second sink).  The struct fields are declared
+nullable, children included, because a null struct whose children are
+declared non-nullable cannot be collected with ``toArrow`` ("nulls in
+input cannot be viewed as non-nullable"); both transforms cast to the
+declared schema.  ``split_request`` splits a tagged frame into
+``(valid, retry)`` frames for readers that want them apart.
+
+An empty claim, the request job's steady state, returns an empty
+``REQUEST_OUTPUT`` frame built as an Arrow ``LocalRelation`` and plans no
+derivation at all.
+
 Known deviation: an explicit JSON ``null`` field (e.g. ``"sid": null``) is
 treated as absent, where Jackson's ``has()``/``asText()`` would yield the
 literal string ``"null"`` — the Jackson behavior is a bug-shaped quirk not
@@ -51,7 +70,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..config import (
     EngineConfig,
@@ -63,27 +82,55 @@ from ..config import (
     TAG_UPDATE,
 )
 from ..schemas import INVOICE_MYSQL_RECORD
+from ..sources.dbapi import local_frame
 
-#: Columns of a retry-queue emission, in the order both functions below emit
-#: them (pre-sink; ``next_retry_delay_s`` is a relative delay the sink turns
-#: into ``CURRENT_TIMESTAMP + INTERVAL ? SECOND``, InvoiceRetrySink.java:36).
-RETRY_EMIT_COLUMNS = [
-    "tag", "queue_id", "sid", "syncid", "job", "payload", "error_message",
-    "error_code", "retry_count", "state", "next_retry_delay_s",
-]
+#: A retry-queue emission, pre-sink: ``next_retry_delay_s`` is a relative
+#: delay the sink turns into ``CURRENT_TIMESTAMP + INTERVAL ? SECOND``
+#: (InvoiceRetrySink.java:36).
+RETRY_EMISSION = T.StructType([
+    T.StructField("tag", T.StringType()),
+    T.StructField("queue_id", T.LongType()),
+    T.StructField("sid", T.StringType()),
+    T.StructField("syncid", T.StringType()),
+    T.StructField("job", T.StringType()),
+    T.StructField("payload", T.StringType()),
+    T.StructField("error_message", T.StringType()),
+    T.StructField("error_code", T.StringType()),
+    T.StructField("retry_count", T.ByteType()),
+    T.StructField("state", T.StringType()),
+    T.StructField("next_retry_delay_s", T.LongType()),
+])
+
+#: Columns of a retry-queue emission, in the order both builders below
+#: emit them.
+RETRY_EMIT_COLUMNS = [f.name for f in RETRY_EMISSION.fields]
+
+#: The request transforms' tagged output: one row per packet element or
+#: claimed retry row, carrying the ``async_inv_in`` ``record`` it yields
+#: and the retry-queue ``emission`` it yields; either may be null.  Every
+#: field is declared nullable, the structs' children too: a null struct
+#: whose children are not nullable fails ``toArrow`` ("nulls in input
+#: cannot be viewed as non-nullable").  Both transforms cast their output
+#: to this schema.
+REQUEST_OUTPUT = T.StructType([
+    T.StructField("record", T.StructType(
+        [T.StructField(f.name, f.dataType) for f in INVOICE_MYSQL_RECORD.fields]
+    )),
+    T.StructField("emission", RETRY_EMISSION),
+])
 
 
-def retry_create_rows(
-    df: DataFrame,
+def retry_create_columns(
     job: str,
     cfg: EngineConfig,
     sid: Column,
     syncid: Column,
     payload: Column,
-) -> DataFrame:
-    """CREATE retry rows for fresh failures (``_error_message`` /
-    ``_error_code`` set): count 0, PENDING, one base interval's delay
-    (transform :47, ``InvoiceResponseBatchProcessor.java:194-202``)."""
+) -> list[Column]:
+    """The RETRY_EMIT_COLUMNS of CREATE retry rows for fresh failures
+    (``_error_message`` / ``_error_code`` set): count 0, PENDING, one base
+    interval's delay (transform :47,
+    ``InvoiceResponseBatchProcessor.java:194-202``)."""
     cols = {
         "tag": F.lit(TAG_CREATE),
         "queue_id": F.lit(None).cast("long"),
@@ -97,20 +144,20 @@ def retry_create_rows(
         "state": F.lit(RETRY_STATE_PENDING),
         "next_retry_delay_s": F.lit(cfg.app_retry_interval_ms // 1000).cast("long"),
     }
-    return df.select(*[cols[c].alias(c) for c in RETRY_EMIT_COLUMNS])
+    return [cols[c].alias(c) for c in RETRY_EMIT_COLUMNS]
 
 
-def retry_outcome_rows(
-    claimed: DataFrame,
+def retry_outcome_columns(
     cfg: EngineConfig,
     error_code: Column,
     error_message: Column,
-) -> DataFrame:
-    """The retry-queue state machine for re-processed claimed rows
-    (reference :113-136, ``InvoiceResponseBatchProcessor.java:276-316``):
-    count > app.max.retries ⇒ MAX_RETRY; no error ⇒ DELETE; otherwise
-    UPDATE with the new error, count + 1 and a ``base_s * 2^new_count``
-    backoff (the *incremented* count, reference :128 then :132)."""
+) -> list[Column]:
+    """The RETRY_EMIT_COLUMNS of the retry-queue state machine for
+    re-processed claimed rows (reference :113-136,
+    ``InvoiceResponseBatchProcessor.java:276-316``): count >
+    app.max.retries ⇒ MAX_RETRY; no error ⇒ DELETE; otherwise UPDATE with
+    the new error, count + 1 and a ``base_s * 2^new_count`` backoff (the
+    *incremented* count, reference :128 then :132)."""
     base_s = cfg.app_retry_interval_ms // 1000
     new_count = (F.col("retry_count") + 1).cast("byte")
     tag = (
@@ -137,11 +184,11 @@ def retry_outcome_rows(
             (F.lit(base_s) * F.pow(F.lit(2.0), new_count.cast("double"))).cast("long"),
         ).otherwise(F.lit(None).cast("long")),
     }
-    return claimed.select(*[cols[c].alias(c) for c in RETRY_EMIT_COLUMNS])
+    return [cols[c].alias(c) for c in RETRY_EMIT_COLUMNS]
 
 
 class RequestSplit(NamedTuple):
-    valid: DataFrame   # INVOICE_MYSQL_RECORD rows ready for the JDBC sink
+    valid: DataFrame   # INVOICE_MYSQL_RECORD rows for the async_inv_in sink
     retry: DataFrame   # RETRY_EMIT_COLUMNS rows for the retry-queue sink
 
 
@@ -259,14 +306,34 @@ def explode_packets(df: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
+def _tagged(df: DataFrame, record: Column, emission: Column) -> DataFrame:
+    """``df`` projected to REQUEST_OUTPUT: the structs cast to the declared
+    nullable types."""
+    return df.select(
+        record.cast(REQUEST_OUTPUT["record"].dataType).alias("record"),
+        emission.cast(REQUEST_OUTPUT["emission"].dataType).alias("emission"),
+    )
+
+
+def split_request(tagged: DataFrame) -> RequestSplit:
+    """A REQUEST_OUTPUT frame as (valid records, retry emissions), for
+    callers that read the two apart (queries, tests)."""
+    return RequestSplit(
+        valid=tagged.where(F.col("record").isNotNull()).select("record.*"),
+        retry=tagged.where(F.col("emission").isNotNull()).select("emission.*"),
+    )
+
+
 def parse_request_packets(
     df: DataFrame,
     cfg: EngineConfig | None = None,
     value_col: str = "value",
     uuid_expr: Column | None = None,
     now_expr: Column | None = None,
-) -> RequestSplit:
-    """Full request transform: packets → (valid records, CREATE retry rows).
+) -> DataFrame:
+    """Full request transform: packets → one REQUEST_OUTPUT row per
+    ``inv_pack`` element, with either its valid ``record`` or its CREATE
+    retry ``emission``.
 
     ``uuid_expr`` / ``now_expr`` exist so tests and DuckDB oracles can inject
     deterministic expressions in place of ``uuid()`` / ``current_timestamp()``.
@@ -274,15 +341,15 @@ def parse_request_packets(
     cfg = cfg or EngineConfig()
     exploded = explode_packets(df, value_col)
     cols = _derived_columns(F.col("elem_v"), F.col("pos"), cfg, uuid_expr, now_expr)
-    derived = exploded.select("*", *[c.alias(name) for name, c in cols.items()])
+    derived = exploded.select("elem", *[c.alias(name) for name, c in cols.items()])
 
     ok = F.col("_error_code").isNull()
-    valid = derived.where(ok).select(*[f.name for f in INVOICE_MYSQL_RECORD.fields])
-    retry = retry_create_rows(
-        derived.where(~ok), RETRY_JOB_REQUEST, cfg,
+    record = F.struct(*[f.name for f in INVOICE_MYSQL_RECORD.fields])
+    emission = F.struct(*retry_create_columns(
+        RETRY_JOB_REQUEST, cfg,
         sid=F.col("_retry_sid"), syncid=F.col("_retry_syncid"), payload=F.col("elem"),
-    )
-    return RequestSplit(valid=valid, retry=retry)
+    ))
+    return _tagged(derived, F.when(ok, record), F.when(~ok, emission))
 
 
 def transform_retry_records(
@@ -290,20 +357,29 @@ def transform_retry_records(
     cfg: EngineConfig | None = None,
     uuid_expr: Column | None = None,
     now_expr: Column | None = None,
-) -> RequestSplit:
+) -> DataFrame:
     """Re-process claimed retry-queue rows (reference T5,
     ``InvoiceRequestTransformer.java:113-136``).
 
     Input: claimed ``invoice_retry`` rows (columns ``id sid syncid job payload
-    error_message error_code retry_count state``).  Output:
+    error_message error_code retry_count state``).  Output: one
+    REQUEST_OUTPUT row per claimed row:
 
-    - ``valid``: records whose payload now parses — with ``retry`` set to the
-      attempt count and the reference's quirk ``group_id = retry_count %
-      modulus`` (``:122`` passes retry_count as the element index);
-    - ``retry``: DELETE rows for those successes (remove from queue), UPDATE
-      rows with incremented count + exponential backoff for re-failures, and
-      MAX_RETRY rows (count > app.max.retries) for the dead-letter path.
+    - ``record``: set when the payload now parses — with ``retry`` set to
+      the attempt count and the reference's quirk ``group_id = retry_count
+      % modulus`` (``:122`` passes retry_count as the element index);
+    - ``emission``: always set — DELETE for those successes (remove from
+      queue), UPDATE with incremented count + exponential backoff for
+      re-failures, and MAX_RETRY (count > app.max.retries) for the
+      dead-letter path.
+
+    An empty claim, the steady state, returns an empty REQUEST_OUTPUT
+    frame without building the derivation: its plan costs hundreds of
+    py4j round trips, and the emptiness check of the claim's
+    ``LocalRelation`` runs no Spark job.
     """
+    if df.isEmpty():
+        return local_frame(df.sparkSession, [], REQUEST_OUTPUT)
     cfg = cfg or EngineConfig()
     over = F.col("retry_count") > cfg.app_max_retries
     payload_v = F.try_parse_json(F.col("payload"))
@@ -322,8 +398,7 @@ def transform_retry_records(
     derived = df.select("*", *[c.alias(f"_d_{name}") for name, c in cols.items()])
 
     ok = ~over & F.col("_d__error_code").isNull()
-
-    valid = derived.where(ok).select(
+    record = F.struct(
         *[
             (
                 F.col("retry_count").cast("byte").alias("retry")
@@ -333,8 +408,7 @@ def transform_retry_records(
             for f in INVOICE_MYSQL_RECORD.fields
         ]
     )
-
-    retry = retry_outcome_rows(
-        derived, cfg, F.col("_d__error_code"), F.col("_d__error_message")
+    emission = F.struct(
+        *retry_outcome_columns(cfg, F.col("_d__error_code"), F.col("_d__error_message"))
     )
-    return RequestSplit(valid=valid, retry=retry)
+    return _tagged(derived, F.when(ok, record), emission)

@@ -71,7 +71,8 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..config import API_TYPES, EngineConfig, RETRY_JOB_RESPONSE
 from ..schemas import RESPONSE_ENVELOPE, RETRY_PAYLOAD_SUPERSET
-from .request import retry_create_rows, retry_outcome_rows
+from ..sources.dbapi import local_frame
+from .request import RETRY_EMISSION, retry_create_columns, retry_outcome_columns
 
 #: Vietnamese success message, verbatim from the reference
 #: (InvoiceResponseItemFactory.java:32).
@@ -262,10 +263,10 @@ def _validation_retry_rows(df: DataFrame, cfg: EngineConfig) -> DataFrame:
         F.col("record_type") == RECORD_TYPE_INV_IN, payload_struct(in_payload_cols)
     ).otherwise(payload_struct(out_payload_cols))
 
-    return retry_create_rows(
-        df, RETRY_JOB_RESPONSE, cfg,
+    return df.select(*retry_create_columns(
+        RETRY_JOB_RESPONSE, cfg,
         sid=F.col("sid"), syncid=F.col("syncid"), payload=payload,
-    )
+    ))
 
 
 def process_response_batch(
@@ -308,7 +309,17 @@ def transform_response_retry_records(
     the normal pipeline (caller unions ``recovered`` into the envelope) and
     DELETEs the queue row, failure UPDATEs with exponential backoff,
     exhaustion dead-letters via MAX_RETRY.
+
+    An empty claim, the steady state, returns empty ``RESPONSE_ENVELOPE``
+    and ``RETRY_EMISSION`` frames without building the derivation, as
+    ``operators.request.transform_retry_records`` does.
     """
+    if df.isEmpty():
+        spark = df.sparkSession
+        return ResponseRetrySplit(
+            recovered=local_frame(spark, [], RESPONSE_ENVELOPE),
+            retry=local_frame(spark, [], RETRY_EMISSION),
+        )
     cfg = cfg or EngineConfig()
     over = F.col("retry_count") > cfg.app_max_retries
     keys = F.json_object_keys(F.col("payload"))
@@ -379,5 +390,5 @@ def transform_response_retry_records(
             env_cols.append(F.col("_p")[f.name].cast(f.dataType).alias(f.name))
     recovered = derived.where(ok).select(env_cols)
 
-    retry = retry_outcome_rows(derived, cfg, F.col("_ec"), F.col("_em"))
+    retry = derived.select(*retry_outcome_columns(cfg, F.col("_ec"), F.col("_em")))
     return ResponseRetrySplit(recovered=recovered, retry=retry)

@@ -45,7 +45,11 @@ from ..functions.multimodal import (
     image_dhash,
     sample_frames,
 )
-from ..operators.request import parse_request_packets, transform_retry_records
+from ..operators.request import (
+    parse_request_packets,
+    split_request,
+    transform_retry_records,
+)
 from ..operators.response import (
     assign_batch_seq,
     build_response_items,
@@ -179,10 +183,10 @@ def request_parse_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: process/request/InvoiceRequestTransformer.java:34-110."""
     packets = _synth_packets(spark, sf_dir)
-    valid, _ = parse_request_packets(
+    valid, _ = split_request(parse_request_packets(
         packets, CFG, uuid_expr=F.lit("uuid-stub"),
         now_expr=F.lit("2026-01-01 00:00:00").cast("timestamp"),
-    )
+    ))
     return valid.select(
         "sid", "syncid", "tax_schema",
         F.col("api_type").cast("int").alias("api_type"),
@@ -207,7 +211,7 @@ def request_validation_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: InvoiceRequestTransformer.java:62-96,157-168."""
     packets = _synth_packets(spark, sf_dir)
-    _, retry = parse_request_packets(packets, CFG)
+    _, retry = split_request(parse_request_packets(packets, CFG))
     return retry.groupBy("error_message", "error_code").agg(
         F.count("*").alias("n")
     )
@@ -250,7 +254,7 @@ def retry_backoff_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") % 6).cast("int").alias("retry_count"),
         F.lit("PROCESSING").alias("state"),
     )
-    _, retry = transform_retry_records(queue, CFG)
+    _, retry = split_request(transform_retry_records(queue, CFG))
     return retry.select(
         F.col("queue_id"),
         "tag",

@@ -26,18 +26,25 @@ conditioned on ``state='PROCESSING'`` (the claim marker), and log-and-delete
 deletes by primary key — so micro-batch replay after failure yields the
 reference's at-least-once behavior with downstream dedup.
 
-The sinks write from the driver, one transaction per sink call.
-:func:`_write` collects the DataFrame once with ``toArrow()`` (a JVM-side
-Arrow collect: no Python-worker task, no ``Row`` unpickled per record),
-reads its timestamps as naive UTC like every other engine timestamp, lets
-the writer map the rows to ``(sql, params-list)`` statements, and runs
-them with ``executemany`` in ``mysql.batch.size`` chunks and one commit,
-retrying the whole transaction after a rollback.  So a sink call is
-written all or nothing, as a batch of the reference's
-``TransactionalLogAndDeleteSink`` is, and a call with no rows opens no
-connection.  The reference's retry sink opens one transaction *per
-record* (``InvoiceRetrySink.java:47-77``) — same observable rows, fewer
-round trips.
+The sinks take rows and write them from the driver, one transaction per
+sink call; they run no Spark job.  The jobs collect: :func:`collect_rows`
+is the one step from a DataFrame to the rows (dicts) the writers take.
+It collects once with ``toArrow()`` (a JVM-side Arrow collect: no
+Python-worker task, no ``Row`` unpickled per record) and reads
+timestamps, nested ones too, as naive UTC like every other engine
+timestamp.  The request job collects its one tagged frame once and hands
+W1 and W3 their parts of it; the response job collects W4's and W3's
+frames one each.  Each writer maps its rows to ``(sql, params-list)``
+statements, and :func:`_write` runs them with ``executemany`` in
+``mysql.batch.size`` chunks and one commit, retrying the whole
+transaction after a rollback.  So a sink call is written all or nothing,
+as a batch of the reference's ``TransactionalLogAndDeleteSink`` is, and a
+call with no rows opens no connection.  The reference's retry sink opens
+one transaction *per record* (``InvoiceRetrySink.java:47-77``) — same
+observable rows, fewer round trips.  Because the collect runs in the
+job, perfbench's traced run books the request job's one Spark job under
+``streaming.jobs.unattributed_s``, and the ``write_*.spark_jobs`` layer
+metrics read 0.
 
 Why the driver: a ``foreachPartition`` writer made every sink call a Spark
 job whose tasks started Python workers to unpickle each row, a fixed cost
@@ -95,8 +102,8 @@ INVOICE_INSERT_COLUMNS = [f.name for f in INVOICE_MYSQL_RECORD.fields]
 
 SUCC_LOG_COLUMNS = [f.name for f in ASYNC_INV_SUCC_LOG_RECORD.fields]
 
-#: The envelope columns W4 reads; the collect leaves out the rest
-#: (``fpt_einvoice_res_json``, ``created_date``, ``updated_date``).
+#: The envelope columns W4 reads; the response job's collect leaves out
+#: the rest (``fpt_einvoice_res_json``, ``created_date``, ``updated_date``).
 LOG_AND_DELETE_COLUMNS = [
     "record_type", "id", "tax_schema", "api_type", "res_type",
     "fpt_einvoice_res_code", "fpt_einvoice_res_msg", "retry", "group_id",
@@ -124,29 +131,36 @@ def _with_retries(fn: Callable[[], None], conn, max_retries: int) -> None:
             time.sleep(min(attempt, 5))  # linear backoff, capped for tests
 
 
-def _collect_rows(df: DataFrame) -> list[dict]:
-    """``df``'s rows as dicts, from one Arrow collect on the driver.
-    Timestamps come back naive UTC: ``toArrow`` tags them with the UTC
-    instant, where ``collect()`` would shift them into the host's zone."""
+def _naive(t: pa.DataType) -> pa.DataType:
+    """``t`` with every timestamp, nested ones too, as naive (no zone)."""
+    if pa.types.is_timestamp(t):
+        return pa.timestamp(t.unit)
+    if pa.types.is_struct(t):
+        return pa.struct([f.with_type(_naive(f.type)) for f in t])
+    return t
+
+
+def collect_rows(df: DataFrame) -> list[dict]:
+    """``df``'s rows as dicts (struct columns as nested dicts), from one
+    Arrow collect on the driver: the rows the writers below take.
+    Timestamps, nested ones too, come back naive UTC: ``toArrow`` tags
+    them with the UTC instant, where ``collect()`` would shift them into
+    the host's zone."""
     table = df.toArrow()
-    naive = pa.schema([
-        f.with_type(pa.timestamp("us")) if pa.types.is_timestamp(f.type) else f
-        for f in table.schema
-    ])
+    naive = pa.schema([f.with_type(_naive(f.type)) for f in table.schema])
     return table.cast(naive).to_pylist()
 
 
 def _write(
-    df: DataFrame,
+    statements: Statements,
     conn_factory: ConnFactory,
-    cfg: EngineConfig,
-    statements: Callable[[list[dict]], Statements],
+    cfg: EngineConfig | None,
 ) -> None:
-    """Run ``statements(rows)`` over all of ``df`` as one transaction:
-    ``executemany`` in ``mysql.batch.size`` chunks, one commit,
-    rollback-and-retry on error.  Opens no connection when every
-    statement has no rows."""
-    stmts = [(sql, params) for sql, params in statements(_collect_rows(df)) if params]
+    """Run ``statements`` as one transaction: ``executemany`` in
+    ``mysql.batch.size`` chunks, one commit, rollback-and-retry on error.
+    Opens no connection when every statement has no rows."""
+    cfg = cfg or EngineConfig()
+    stmts = [(sql, params) for sql, params in statements if params]
     if not stmts:
         return
     batch_size = cfg.mysql_batch_size
@@ -166,28 +180,24 @@ def _write(
 
 
 def write_invoice_records(
-    df: DataFrame,
+    rows: list[dict],
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
 ) -> None:
     """W1: batched insert of INVOICE_MYSQL_RECORD rows into ``async_inv_in``.
 
-    All of ``df``'s rows are inserted in ``mysql.batch.size`` chunks inside
+    All of ``rows`` are inserted in ``mysql.batch.size`` chunks inside
     one transaction (reference batch 2000 / flush 5000 ms / 3 retries,
     ``job/InvoiceRequest.java:144-148``; the flush interval is the
     micro-batch trigger in streaming mode).
     """
     sql = conn_factory.dialect.insert_sql("async_inv_in", INVOICE_INSERT_COLUMNS)
-    _write(
-        df.select(INVOICE_INSERT_COLUMNS),
-        conn_factory,
-        cfg or EngineConfig(),
-        lambda rows: [(sql, [tuple(r.values()) for r in rows])],
-    )
+    params = [tuple(r[c] for c in INVOICE_INSERT_COLUMNS) for r in rows]
+    _write([(sql, params)], conn_factory, cfg)
 
 
 def write_retry_emissions(
-    df: DataFrame,
+    rows: list[dict],
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
     now: datetime | None = None,
@@ -214,44 +224,39 @@ def write_retry_emissions(
     delete_sql = dialect.retry_delete_sql()
     error_sql = dialect.error_log_insert_sql()
     server_side = dialect.server_side_interval
-
-    def statements(rows: list[dict]) -> Statements:
-        base = now or utcnow()
-        creates, updates, dead, deletes = [], [], [], []
-        for r in rows:
-            delay = r["next_retry_delay_s"]
-            # a server-side dialect binds the delay, others the absolute time
-            when = delay if server_side or delay is None else base + timedelta(seconds=delay)
-            if r["tag"] == TAG_CREATE:
-                creates.append(
-                    (r["sid"], r["syncid"], r["job"], r["payload"], when,
-                     r["error_message"], r["error_code"])
-                )
-            elif r["tag"] == TAG_UPDATE:
-                updates.append(
-                    (r["error_message"], r["error_code"], when,
-                     r["retry_count"], r["queue_id"])
-                )
-            elif r["tag"] == TAG_DELETE:
-                deletes.append((r["queue_id"],))
-            elif r["tag"] == TAG_MAX_RETRY:
-                dead.append(
-                    (r["payload"], r["error_message"], r["error_code"],
-                     r["retry_count"] - 1, r["sid"], r["syncid"])
-                )
-                deletes.append((r["queue_id"],))
-        return [
-            (insert_sql, creates),
-            (update_sql, updates),
-            (error_sql, dead),
-            (delete_sql, deletes),
-        ]
-
-    _write(df, conn_factory, cfg or EngineConfig(), statements)
+    base = now or utcnow()
+    creates, updates, dead, deletes = [], [], [], []
+    for r in rows:
+        delay = r["next_retry_delay_s"]
+        # a server-side dialect binds the delay, others the absolute time
+        when = delay if server_side or delay is None else base + timedelta(seconds=delay)
+        if r["tag"] == TAG_CREATE:
+            creates.append(
+                (r["sid"], r["syncid"], r["job"], r["payload"], when,
+                 r["error_message"], r["error_code"])
+            )
+        elif r["tag"] == TAG_UPDATE:
+            updates.append(
+                (r["error_message"], r["error_code"], when,
+                 r["retry_count"], r["queue_id"])
+            )
+        elif r["tag"] == TAG_DELETE:
+            deletes.append((r["queue_id"],))
+        elif r["tag"] == TAG_MAX_RETRY:
+            dead.append(
+                (r["payload"], r["error_message"], r["error_code"],
+                 r["retry_count"] - 1, r["sid"], r["syncid"])
+            )
+            deletes.append((r["queue_id"],))
+    _write(
+        [(insert_sql, creates), (update_sql, updates), (error_sql, dead),
+         (delete_sql, deletes)],
+        conn_factory, cfg,
+    )
 
 
 def write_log_and_delete(
-    df: DataFrame,
+    rows: list[dict],
     conn_factory: ConnFactory,
     cfg: EngineConfig | None = None,
     now: datetime | None = None,
@@ -269,25 +274,24 @@ def write_log_and_delete(
     insert_sql = dialect.insert_sql("async_inv_succ_log", SUCC_LOG_COLUMNS)
     delete_in_sql = dialect.delete_by_id_sql("async_inv_in")
     delete_out_sql = dialect.delete_by_id_sql("async_inv_out")
-
-    def statements(rows: list[dict]) -> Statements:
-        base = now or utcnow()
-        logs, del_in, del_out = [], [], []
-        for r in rows:
-            is_in = r["record_type"] == "inv_in"
-            logs.append(
-                (
-                    r["tax_schema"], r["api_type"], r["res_type"],
-                    r["fpt_einvoice_res_code"] if is_in else None,
-                    r["fpt_einvoice_res_msg"] if is_in else None,
-                    r["retry"], r["group_id"], base, None,
-                    r["callback_res_code"] if is_in else None,
-                    r["callback_res_msg"] if is_in else None,
-                    r["sid"], r["syncid"],
-                    None if is_in else r["gdt_res"],
-                )
+    base = now or utcnow()
+    logs, del_in, del_out = [], [], []
+    for r in rows:
+        is_in = r["record_type"] == "inv_in"
+        logs.append(
+            (
+                r["tax_schema"], r["api_type"], r["res_type"],
+                r["fpt_einvoice_res_code"] if is_in else None,
+                r["fpt_einvoice_res_msg"] if is_in else None,
+                r["retry"], r["group_id"], base, None,
+                r["callback_res_code"] if is_in else None,
+                r["callback_res_msg"] if is_in else None,
+                r["sid"], r["syncid"],
+                None if is_in else r["gdt_res"],
             )
-            (del_in if is_in else del_out).append((r["id"],))
-        return [(insert_sql, logs), (delete_in_sql, del_in), (delete_out_sql, del_out)]
-
-    _write(df.select(LOG_AND_DELETE_COLUMNS), conn_factory, cfg or EngineConfig(), statements)
+        )
+        (del_in if is_in else del_out).append((r["id"],))
+    _write(
+        [(insert_sql, logs), (delete_in_sql, del_in), (delete_out_sql, del_out)],
+        conn_factory, cfg,
+    )

@@ -93,7 +93,7 @@ def _coerce(rows: list[tuple], schema) -> list[tuple]:
     return out
 
 
-def _local_frame(
+def local_frame(
     spark: SparkSession, rows: list[tuple], schema: StructType
 ) -> DataFrame:
     """``rows`` (already coerced to ``schema``) as a DataFrame over a JVM
@@ -131,7 +131,7 @@ def _poll_ready(
         rows = _coerce(cur.fetchall(), schema)
     finally:
         conn.close()
-    return _local_frame(spark, rows, schema), max((r[0] for r in rows), default=last_id)
+    return local_frame(spark, rows, schema), max((r[0] for r in rows), default=last_id)
 
 
 def poll_async_inv_in(
@@ -260,6 +260,6 @@ def claim_retry_batch(
         raise
     else:
         conn.close()
-    return _local_frame(
+    return local_frame(
         spark, _coerce(claimed, INVOICE_RETRY_RECORD), INVOICE_RETRY_RECORD
     )

@@ -50,6 +50,8 @@ from ..operators.response import (
     transform_response_retry_records,
 )
 from ..sinks.dbapi import (
+    LOG_AND_DELETE_COLUMNS,
+    collect_rows,
     write_invoice_records,
     write_log_and_delete,
     write_retry_emissions,
@@ -70,8 +72,13 @@ def request_micro_batch(
 ) -> None:
     """One micro-batch of the request job: new packets + claimed retry rows
     → insert valid records, enqueue failures.  Usable directly as the body
-    of ``foreachBatch``."""
-    valid, retry = parse_request_packets(packets_df, cfg)
+    of ``foreachBatch``.
+
+    Both transforms return one tagged row per packet element or claimed
+    row, so the micro-batch is computed once: one Spark job collects it
+    (``collect_rows``) and both sinks take their rows from that collect.
+    """
+    tagged = parse_request_packets(packets_df, cfg)
     # the reap lease revives claims orphaned by an epoch that died
     # between its claim commit and its sink (the replayed epoch
     # cannot re-claim them itself — the flip already committed)
@@ -79,9 +86,11 @@ def request_micro_batch(
         spark, conn_factory, RETRY_JOB_REQUEST, cfg,
         reap_processing_after_s=cfg.processing_lease_s,
     )
-    r_valid, r_retry = transform_retry_records(claimed, cfg)
-    write_invoice_records(valid.unionByName(r_valid), conn_factory, cfg)
-    write_retry_emissions(retry.unionByName(r_retry), conn_factory, cfg)
+    rows = collect_rows(tagged.unionByName(transform_retry_records(claimed, cfg)))
+    records = [r["record"] for r in rows if r["record"] is not None]
+    emissions = [r["emission"] for r in rows if r["emission"] is not None]
+    write_invoice_records(records, conn_factory, cfg)
+    write_retry_emissions(emissions, conn_factory, cfg)
 
 
 def run_invoice_request_job(
@@ -142,9 +151,10 @@ def respond(
     # Step 1: Kafka first, Step 2: DB transaction — the reference's ordering
     # (InvoiceResponseBatchProcessor.java:205-218)
     packet_sink(result.packets)
-    write_log_and_delete(result.db_ops, conn_factory, cfg)
+    db_ops = collect_rows(result.db_ops.select(LOG_AND_DELETE_COLUMNS))
+    write_log_and_delete(db_ops, conn_factory, cfg)
     retry = result.retry.unionByName(retry_emits).coalesce(1)
-    write_retry_emissions(retry, conn_factory, cfg)
+    write_retry_emissions(collect_rows(retry), conn_factory, cfg)
 
 
 def response_cycle(

@@ -17,7 +17,7 @@ from flink_invoice_processor_spark.dbdialect import (
     MySQLConnFactory,
     SQLITE,
 )
-from flink_invoice_processor_spark.sinks.dbapi import write_retry_emissions
+from flink_invoice_processor_spark.sinks.dbapi import collect_rows, write_retry_emissions
 from flink_invoice_processor_spark.sources.dbapi import claim_retry_batch
 
 CFG = EngineConfig()
@@ -146,7 +146,7 @@ def test_mysql_sink_binds_delay_seconds(spark, tmp_path):
         ],
         RETRY_EMIT_SCHEMA,
     ).coalesce(1)
-    write_retry_emissions(emits, RecordingConnFactory(log), CFG)
+    write_retry_emissions(collect_rows(emits), RecordingConnFactory(log), CFG)
 
     stmts = RecordingConnFactory(log).read()
     by_sql = {s["sql"]: s["params"] for s in stmts}

@@ -8,6 +8,8 @@ import importlib.util
 import sys
 from pathlib import Path
 
+import pytest
+
 TOOL = Path(__file__).resolve().parents[1] / "tools" / "op_counts.py"
 
 
@@ -60,3 +62,12 @@ def test_medians_over_ops(monkeypatch):
     ops = [dict(zip(tool.FIELDS, (i, i, 10 * i, 3, 0))) for i in (1, 2, 9)]
     assert tool.medians(ops) == {"wall_s": 2, "cpu_s": 2, "py4j_commands": 20,
                                  "spark_jobs": 3, "janino_compilations": 0}
+
+
+def test_cli_takes_every_engine_workload(monkeypatch):
+    tool = _tool(monkeypatch)
+    for name in ("request_ingest", "response_drain", "retry_churn"):
+        args = tool.parse_args(["--workload", name, "--seed", "7"])
+        assert (args.workload, args.seed, args.ops) == (name, 7, 5)
+    with pytest.raises(SystemExit):
+        tool.parse_args(["--workload", "analytics_mix", "--seed", "7"])

@@ -26,7 +26,10 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from flink_invoice_processor_spark.operators.request import parse_request_packets
+from flink_invoice_processor_spark.operators.request import (
+    parse_request_packets,
+    split_request,
+)
 
 # values: absent (None sentinel), empty, plain, unicode, whitespace
 _VALUES = st.sampled_from(["", "v1", "tax-22", "Tạo", " ", "x" * 40])
@@ -111,7 +114,7 @@ def _expected(spec: dict, pos: int):
 def test_fallback_precedence_matches_reference_model(specs, spark):
     packet = json.dumps({"inv_pack": [_build(s) for s in specs]})
     df = spark.createDataFrame([(packet,)], "value string")
-    valid, retry = parse_request_packets(df, uuid_expr=F.lit(GEN))
+    valid, retry = split_request(parse_request_packets(df, uuid_expr=F.lit(GEN)))
 
     got_valid = sorted(
         (r.sid, r.syncid, r.tax_schema, r.api_type, r.group_id)

@@ -13,6 +13,7 @@ from flink_invoice_processor_spark.config import EngineConfig
 from flink_invoice_processor_spark.operators.request import (
     explode_packets,
     parse_request_packets,
+    split_request,
     transform_retry_records,
 )
 
@@ -48,7 +49,9 @@ E4 = {"api_type": 14, "sid": "S-e4", "stax": "123"}  # no syncid → uuid
 
 def run(spark, *elems):
     df = spark.createDataFrame([(packet(*elems),)], ["value"])
-    return parse_request_packets(df, CFG, uuid_expr=det_uuid(), now_expr=det_now())
+    return split_request(
+        parse_request_packets(df, CFG, uuid_expr=det_uuid(), now_expr=det_now())
+    )
 
 
 def test_v1_top_level_fields(spark):
@@ -175,7 +178,9 @@ def retry_row(id, payload, count, sid="S-r", syncid="Y-r"):
 
 def test_retry_success_emits_delete_and_record(spark):
     df = spark.createDataFrame([retry_row(7, V1, 2)], RETRY_COLS)
-    valid, retry = transform_retry_records(df, CFG, uuid_expr=det_uuid(), now_expr=det_now())
+    valid, retry = split_request(
+        transform_retry_records(df, CFG, uuid_expr=det_uuid(), now_expr=det_now())
+    )
     rec = valid.collect()[0]
     assert rec.retry == 2  # attempt count carried onto the record
     assert rec.group_id == 2 % CFG.group_id_modulus  # quirk: index = retry_count
@@ -188,7 +193,9 @@ def test_retry_success_emits_delete_and_record(spark):
 
 def test_retry_failure_emits_update_with_backoff(spark):
     df = spark.createDataFrame([retry_row(8, E1, 1)], RETRY_COLS)
-    valid, retry = transform_retry_records(df, CFG, uuid_expr=det_uuid(), now_expr=det_now())
+    valid, retry = split_request(
+        transform_retry_records(df, CFG, uuid_expr=det_uuid(), now_expr=det_now())
+    )
     assert valid.count() == 0
     row = retry.collect()[0]
     assert row.tag == "UPDATE"
@@ -200,7 +207,9 @@ def test_retry_failure_emits_update_with_backoff(spark):
 
 def test_retry_exhausted_dead_letters(spark):
     df = spark.createDataFrame([retry_row(9, V1, CFG.app_max_retries + 1)], RETRY_COLS)
-    valid, retry = transform_retry_records(df, CFG, uuid_expr=det_uuid(), now_expr=det_now())
+    valid, retry = split_request(
+        transform_retry_records(df, CFG, uuid_expr=det_uuid(), now_expr=det_now())
+    )
     assert valid.count() == 0
     row = retry.collect()[0]
     assert row.tag == "MAX_RETRY"
@@ -211,5 +220,35 @@ def test_retry_exhausted_dead_letters(spark):
 @pytest.mark.parametrize("count,expected_backoff", [(0, 20), (1, 40), (2, 80), (3, 160)])
 def test_backoff_schedule(spark, count, expected_backoff):
     df = spark.createDataFrame([retry_row(1, E2, count)], RETRY_COLS)
-    _, retry = transform_retry_records(df, CFG, uuid_expr=det_uuid(), now_expr=det_now())
+    _, retry = split_request(
+        transform_retry_records(df, CFG, uuid_expr=det_uuid(), now_expr=det_now())
+    )
     assert retry.collect()[0].next_retry_delay_s == expected_backoff
+
+
+def test_empty_claim_builds_no_derivation(spark, monkeypatch):
+    """The steady state claims nothing: an empty claim returns an empty
+    frame of the declared output schema, runs no Spark job and builds no
+    column derivation; a non-empty claim builds it once."""
+    from flink_invoice_processor_spark.operators import request
+    from flink_invoice_processor_spark.schemas import INVOICE_RETRY_RECORD
+    from flink_invoice_processor_spark.sources.dbapi import local_frame
+    from test_streaming_jobs import jobs_run_by
+
+    calls = []
+    derive = request._derived_columns
+    monkeypatch.setattr(
+        request, "_derived_columns",
+        lambda *args, **kwargs: calls.append(1) or derive(*args, **kwargs),
+    )
+    empty = local_frame(spark, [], INVOICE_RETRY_RECORD)
+    frames = []
+    assert jobs_run_by(spark, lambda: frames.append(transform_retry_records(empty, CFG))) == 0
+    assert calls == []
+    (out,) = frames
+    assert out.schema == request.REQUEST_OUTPUT
+    assert out.collect() == []
+
+    df = spark.createDataFrame([retry_row(7, V1, 2)], RETRY_COLS)
+    transform_retry_records(df, CFG)
+    assert calls == [1]

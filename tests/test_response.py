@@ -226,3 +226,32 @@ def test_recovered_row_reenters_pipeline(spark):
     p = res.packets.collect()[0]
     assert p.topic == "mtt.upd.response"
     assert json.loads(p.packet_json)["inv_pack_res"][0]["res_resource"] == "gdt"
+
+
+def test_empty_claim_builds_no_derivation(spark, monkeypatch):
+    """An empty RESPONSE claim returns empty frames of the envelope and
+    retry-emission schemas without building the state machine; a
+    non-empty claim builds it once."""
+    from flink_invoice_processor_spark.operators import response
+    from flink_invoice_processor_spark.operators.request import RETRY_EMISSION
+    from flink_invoice_processor_spark.schemas import (
+        INVOICE_RETRY_RECORD,
+        RESPONSE_ENVELOPE,
+    )
+    from flink_invoice_processor_spark.sources.dbapi import local_frame
+
+    calls = []
+    outcome = response.retry_outcome_columns
+    monkeypatch.setattr(
+        response, "retry_outcome_columns",
+        lambda *args, **kwargs: calls.append(1) or outcome(*args, **kwargs),
+    )
+    rec, retry = transform_response_retry_records(
+        local_frame(spark, [], INVOICE_RETRY_RECORD), CFG
+    )
+    assert calls == []
+    assert (rec.schema, retry.schema) == (RESPONSE_ENVELOPE, RETRY_EMISSION)
+    assert rec.collect() == [] and retry.collect() == []
+
+    transform_response_retry_records(retry_df(spark, "{}"), CFG)
+    assert calls == [1]

@@ -27,6 +27,7 @@ from flink_invoice_processor_spark.schemas import (
 )
 from flink_invoice_processor_spark.sinks.dbapi import (
     SqliteConnFactory,
+    collect_rows,
     write_invoice_records,
     write_log_and_delete,
     write_retry_emissions,
@@ -99,7 +100,10 @@ RETRY_EMIT_SCHEMA = (
 
 
 def test_write_invoice_records(spark, db):
-    from flink_invoice_processor_spark.operators.request import parse_request_packets
+    from flink_invoice_processor_spark.operators.request import (
+        parse_request_packets,
+        split_request,
+    )
 
     packet = json.dumps(
         {"inv_pack": [
@@ -107,8 +111,10 @@ def test_write_invoice_records(spark, db):
             {"api_type": 11, "sid": "S-2", "syncid": "Y-2", "stax": "456"},
         ]}
     )
-    valid, _ = parse_request_packets(spark.createDataFrame([(packet,)], ["value"]), CFG)
-    write_invoice_records(valid, db, CFG)
+    valid, _ = split_request(
+        parse_request_packets(spark.createDataFrame([(packet,)], ["value"]), CFG)
+    )
+    write_invoice_records(collect_rows(valid), db, CFG)
     rows = q(db, "SELECT tax_schema, api_type, res_type, sid, state FROM async_inv_in ORDER BY sid")
     assert rows == [("123", 10, None, "S-1", 0), ("456", 11, None, "S-2", 0)]
 
@@ -141,7 +147,10 @@ class FailOnSecondExecutemany(SqliteConnFactory):
 def _valid_records(spark, n, cfg=CFG, now_expr=None):
     """The valid ``async_inv_in`` records parsed from one packet of ``n``
     elements."""
-    from flink_invoice_processor_spark.operators.request import parse_request_packets
+    from flink_invoice_processor_spark.operators.request import (
+        parse_request_packets,
+        split_request,
+    )
 
     packet = json.dumps(
         {"inv_pack": [
@@ -149,9 +158,9 @@ def _valid_records(spark, n, cfg=CFG, now_expr=None):
             for i in range(n)
         ]}
     )
-    valid, _ = parse_request_packets(
+    valid, _ = split_request(parse_request_packets(
         spark.createDataFrame([(packet,)], ["value"]), cfg, now_expr=now_expr
-    )
+    ))
     return valid
 
 
@@ -162,7 +171,9 @@ def test_invoice_insert_is_all_or_nothing_per_partition(spark, db):
     cfg = EngineConfig(mysql_batch_size=2, mysql_max_retries=0)
     valid = _valid_records(spark, 5, cfg)
     with pytest.raises(Exception, match="injected failure"):
-        write_invoice_records(valid.coalesce(1), FailOnSecondExecutemany(db.path), cfg)
+        write_invoice_records(
+            collect_rows(valid.coalesce(1)), FailOnSecondExecutemany(db.path), cfg
+        )
     assert q(db, "SELECT count(*) FROM async_inv_in") == [(0,)]
 
 
@@ -174,7 +185,7 @@ def test_invoice_insert_is_all_or_nothing_across_partitions(spark, db):
     valid = _valid_records(spark, 5, cfg).repartition(2)
     assert sorted(len(p) for p in valid.rdd.glom().collect()) == [2, 3]
     with pytest.raises(Exception, match="injected failure"):
-        write_invoice_records(valid, FailOnSecondExecutemany(db.path), cfg)
+        write_invoice_records(collect_rows(valid), FailOnSecondExecutemany(db.path), cfg)
     assert q(db, "SELECT count(*) FROM async_inv_in") == [(0,)]
 
 
@@ -198,7 +209,7 @@ def test_sinks_write_from_the_driver(spark, db):
     with pytest.raises(TypeError):
         pickle.dumps(factory)
 
-    write_invoice_records(_valid_records(spark, 3).repartition(2), factory, CFG)
+    write_invoice_records(collect_rows(_valid_records(spark, 3).repartition(2)), factory, CFG)
     assert q(db, "SELECT count(*) FROM async_inv_in") == [(3,)]
 
     emits = spark.createDataFrame(
@@ -206,7 +217,7 @@ def test_sinks_write_from_the_driver(spark, db):
          for i in range(3)],
         RETRY_EMIT_SCHEMA,
     ).repartition(2)
-    write_retry_emissions(emits, factory, CFG, now=NOW)
+    write_retry_emissions(collect_rows(emits), factory, CFG, now=NOW)
     assert q(db, "SELECT count(*) FROM invoice_retry") == [(3,)]
 
     ops = spark.createDataFrame(
@@ -215,7 +226,7 @@ def test_sinks_write_from_the_driver(spark, db):
          for i in (1, 2, 3)],
         RESPONSE_ENVELOPE,
     ).repartition(2)
-    write_log_and_delete(ops, factory, CFG, now=NOW)
+    write_log_and_delete(collect_rows(ops), factory, CFG, now=NOW)
     assert q(db, "SELECT count(*) FROM async_inv_in") == [(0,)]
     assert q(db, "SELECT count(*) FROM async_inv_succ_log") == [(3,)]
 
@@ -230,18 +241,18 @@ def test_empty_sink_calls_open_no_connection(spark, db):
         # empty partitions the optimizer cannot prove empty
         return df.repartition(3).where(F.col("sid") == "no such sid")
 
-    write_invoice_records(empty(_valid_records(spark, 3)), factory, CFG)
+    write_invoice_records(collect_rows(empty(_valid_records(spark, 3))), factory, CFG)
     emits = spark.createDataFrame(
         [("CREATE", None, "S", "Y", "REQUEST", "{}", "m", "E", 0, "PENDING", 5)],
         RETRY_EMIT_SCHEMA,
     )
-    write_retry_emissions(empty(emits), factory, CFG)
+    write_retry_emissions(collect_rows(empty(emits)), factory, CFG)
     ops = spark.createDataFrame(
         [("inv_in", 1, 10, "S", "Y", "123", 0, 1, 2,
           None, None, None, None, None, None, None, None)],
         RESPONSE_ENVELOPE,
     )
-    write_log_and_delete(empty(ops), factory, CFG)
+    write_log_and_delete(collect_rows(empty(ops)), factory, CFG)
 
 
 def test_retry_create_then_claim_lifecycle(spark, db):
@@ -254,7 +265,7 @@ def test_retry_create_then_claim_lifecycle(spark, db):
         ],
         RETRY_EMIT_SCHEMA,
     )
-    write_retry_emissions(emits, db, CFG, now=NOW)
+    write_retry_emissions(collect_rows(emits), db, CFG, now=NOW)
     assert len(q(db, "SELECT * FROM invoice_retry")) == 3
 
     # claim only due REQUEST rows
@@ -273,7 +284,7 @@ def test_retry_create_then_claim_lifecycle(spark, db):
         [("UPDATE", qid, "S-1", "Y-1", "REQUEST", "{}", "new-msg", "Exception", 1, "PENDING", 20)],
         RETRY_EMIT_SCHEMA,
     )
-    write_retry_emissions(upd, db, CFG, now=NOW)
+    write_retry_emissions(collect_rows(upd), db, CFG, now=NOW)
     row = q(db, "SELECT state, retry_count, error_message, next_retry_time FROM invoice_retry WHERE id=?", (qid,))[0]
     assert row[0] == "PENDING" and row[1] == 1 and row[2] == "new-msg"
     assert datetime.fromisoformat(row[3]) == NOW + timedelta(seconds=20)
@@ -286,7 +297,7 @@ def test_retry_create_then_claim_lifecycle(spark, db):
         [("DELETE", qid, "S-1", "Y-1", "REQUEST", "{}", None, None, 1, "PENDING", None)],
         RETRY_EMIT_SCHEMA,
     )
-    write_retry_emissions(dele, db, CFG, now=later)
+    write_retry_emissions(collect_rows(dele), db, CFG, now=later)
     assert q(db, "SELECT count(*) FROM invoice_retry WHERE id=?", (qid,)) == [(0,)]
 
 
@@ -305,7 +316,7 @@ def test_update_requires_processing_state(spark, db):
         [("UPDATE", qid, "S", "Y", "REQUEST", "{}", "changed", "E", 1, "PENDING", 20)],
         RETRY_EMIT_SCHEMA,
     )
-    write_retry_emissions(upd, db, CFG, now=NOW)
+    write_retry_emissions(collect_rows(upd), db, CFG, now=NOW)
     assert q(db, "SELECT error_message, retry_count FROM invoice_retry") == [("m", 0)]
 
 
@@ -323,7 +334,7 @@ def test_max_retry_dead_letters(spark, db):
         [("MAX_RETRY", qid, "S", "Y", "REQUEST", '{"p":1}', "m", "E", 4, "PENDING", None)],
         RETRY_EMIT_SCHEMA,
     )
-    write_retry_emissions(dead, db, CFG, now=NOW)
+    write_retry_emissions(collect_rows(dead), db, CFG, now=NOW)
     # queue row gone, error-log row has attempt = retry_count - 1 (:119)
     assert q(db, "SELECT count(*) FROM invoice_retry") == [(0,)]
     assert q(db, "SELECT payload, attempt, sid FROM invoice_error_log") == [('{"p":1}', 3, "S")]
@@ -359,7 +370,7 @@ def test_log_and_delete_transactional(spark, db):
         ],
         env_schema,
     )
-    write_log_and_delete(ops, db, CFG, now=NOW)
+    write_log_and_delete(collect_rows(ops), db, CFG, now=NOW)
 
     assert q(db, "SELECT count(*) FROM async_inv_in") == [(0,)]
     assert q(db, "SELECT count(*) FROM async_inv_out") == [(0,)]
@@ -404,7 +415,7 @@ def test_retry_stale_claim_reaper(spark, db):
           0, "PENDING", -120)],
         RETRY_EMIT_SCHEMA,
     )
-    write_retry_emissions(emits, db, CFG, now=NOW)
+    write_retry_emissions(collect_rows(emits), db, CFG, now=NOW)
     # a claimer takes the row, then dies before its sink runs
     assert claim_retry_batch(spark, db, "REQUEST", CFG, now=NOW).count() == 1
     # without the reaper the row is stranded in PROCESSING forever
@@ -574,5 +585,5 @@ def test_written_timestamps_ignore_host_time_zone(spark, db):
         spark, 1, now_expr=F.lit("2026-01-01 00:00:00").cast("timestamp")
     )
     with _host_time_zone("Asia/Ho_Chi_Minh"):
-        write_invoice_records(valid, db, CFG)
+        write_invoice_records(collect_rows(valid), db, CFG)
     assert q(db, "SELECT created_date FROM async_inv_in") == [("2026-01-01 00:00:00",)]

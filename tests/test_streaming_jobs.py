@@ -8,19 +8,23 @@ from __future__ import annotations
 
 import json
 import sqlite3
+import uuid
+from datetime import datetime
 
 import pytest
 
 from flink_invoice_processor_spark.config import EngineConfig
+from flink_invoice_processor_spark.dbdialect import utcnow
 from flink_invoice_processor_spark.sinks.dbapi import SqliteConnFactory
 from flink_invoice_processor_spark.streaming.jobs import (
     MARKS_FILE,
+    request_micro_batch,
     response_cycle,
     run_invoice_request_job,
     run_invoice_response_job,
 )
 
-from test_sinks_sources import DDL
+from test_sinks_sources import DDL, _host_time_zone
 
 CFG = EngineConfig()
 
@@ -238,3 +242,68 @@ def test_response_job_sleeps_only_after_idle_cycles(spark, db, tmp_path, monkeyp
     assert q(db, "SELECT sid FROM async_inv_succ_log ORDER BY sid") == [
         ("S-1",), ("S-2",)
     ]
+
+
+def jobs_run_by(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts."""
+    sc = spark.sparkContext
+    group = f"jobs-run-by-{uuid.uuid4()}"
+    sc.setJobGroup(group, "jobs_run_by")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker learns of jobs through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_request_micro_batch_runs_one_spark_job(spark, db):
+    """Both request transforms tag their rows, so one Spark job computes
+    the micro-batch and both sinks write from it: the valid elements and
+    the recovered retry row reach ``async_inv_in``, the defective element
+    becomes a CREATE row and the claimed row is deleted."""
+    conn = db()
+    conn.execute(
+        "INSERT INTO invoice_retry (sid, syncid, job, payload, error_message, "
+        "error_code, retry_count, state, next_retry_time) VALUES "
+        "('S-R', 'Y-R', 'REQUEST', ?, 'old', 'Exception', 1, 'PENDING', "
+        "'2000-01-01 00:00:00')",
+        (json.dumps({"api_type": 12, "sid": "S-R", "syncid": "Y-R", "stax": "999"}),),
+    )
+    conn.commit()
+    conn.close()
+    packets = spark.createDataFrame([(packet(
+        {"api_type": 10, "sid": "S-1", "syncid": "Y-1", "stax": "111"},
+        {"api_type": 10, "sid": "S-3", "inv": {"x": 1}},  # no stax → retry
+        {"api_type": 11, "sid": "S-2", "syncid": "Y-2", "stax": "222"},
+    ),)], "value string")
+
+    assert jobs_run_by(spark, lambda: request_micro_batch(packets, spark, CFG, db)) == 1
+    assert q(db, "SELECT sid, syncid, tax_schema, api_type, retry, group_id, state "
+                 "FROM async_inv_in ORDER BY sid") == [
+        ("S-1", "Y-1", "111", 10, 0, 0, 0),
+        ("S-2", "Y-2", "222", 11, 0, 2 % CFG.group_id_modulus, 0),
+        ("S-R", "Y-R", "999", 12, 1, 1 % CFG.group_id_modulus, 0),
+    ]
+    assert q(db, "SELECT sid, job, payload, error_message, error_code, "
+                 "retry_count, state FROM invoice_retry") == [
+        ("S-3", "REQUEST", '{"api_type":10,"inv":{"x":1},"sid":"S-3"}',
+         "stax is null", "Exception", 0, "PENDING"),
+    ]
+
+
+def test_request_micro_batch_stores_created_date_as_naive_utc(spark, db):
+    """``created_date`` reaches the sink inside the tagged frame's record
+    struct and is still stored as naive UTC on a UTC+7 host."""
+    packets = spark.createDataFrame([(packet(
+        {"api_type": 10, "sid": "S-1", "syncid": "Y-1", "stax": "111"},
+    ),)], "value string")
+    with _host_time_zone("Asia/Ho_Chi_Minh"):
+        before = utcnow().replace(microsecond=0)
+        request_micro_batch(packets, spark, CFG, db)
+        after = utcnow()
+    ((stored,),) = q(db, "SELECT created_date FROM async_inv_in")
+    created = datetime.fromisoformat(stored)
+    assert created.tzinfo is None
+    assert before <= created <= after

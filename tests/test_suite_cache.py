@@ -32,36 +32,6 @@ def test_memo_passthrough_and_scope():
     assert SC.memo(k1, build) == 6              # scope gone
 
 
-def test_nested_memo_builds_are_not_double_counted():
-    """A builder that resolves another memo inside itself (the r13-ADVICE
-    shape: tight simhash pairs build the shared signature in their
-    builder lambda) must charge the child's seconds to the CHILD's
-    ledger entry only — r14's first bench measured the double-count as a
-    phantom +1.9 s artifact entry and a −2.1 s query entry."""
-    import time as _t
-
-    def child():
-        _t.sleep(0.05)
-        return "sig"
-
-    def parent():
-        inner = SC.memo(("simhash_sig", 32), child)
-        _t.sleep(0.05)
-        return inner + ":pairs"
-
-    SC.enable()
-    try:
-        assert SC.memo(("simhash_pairs", 32, 3), parent) == "sig:pairs"
-        built = SC.drain_build_times()
-    finally:
-        SC.disable()
-    assert set(built) == {"simhash_sig:32", "simhash_pairs:32:3"}
-    # child's ~0.05 s lands once: in its own entry, not also the parent's
-    assert 0.04 <= built["simhash_sig:32"] < 0.1
-    assert 0.04 <= built["simhash_pairs:32:3"] < 0.1
-    assert built["simhash_sig:32"] + built["simhash_pairs:32:3"] < 0.18
-
-
 class _ThreadClock:
     """A ``time`` stand-in whose ``perf_counter`` is a per-thread virtual
     clock that only ``work`` advances, so build times are exact."""
@@ -74,6 +44,35 @@ class _ThreadClock:
 
     def work(self, seconds: float) -> None:
         self._local.t = self.perf_counter() + seconds
+
+
+def test_nested_memo_builds_are_not_double_counted(monkeypatch):
+    """A builder that resolves another memo inside itself (the r13-ADVICE
+    shape: tight simhash pairs build the shared signature in their
+    builder lambda) must charge the child's seconds to the CHILD's
+    ledger entry only — r14's first bench measured the double-count as a
+    phantom +1.9 s artifact entry and a −2.1 s query entry.  The virtual
+    clock makes the recorded times exact."""
+    clock = _ThreadClock()
+    monkeypatch.setattr(SC, "time", clock)
+
+    def child():
+        clock.work(1.0)
+        return "sig"
+
+    def parent():
+        inner = SC.memo(("simhash_sig", 32), child)
+        clock.work(2.0)
+        return inner + ":pairs"
+
+    SC.enable()
+    try:
+        assert SC.memo(("simhash_pairs", 32, 3), parent) == "sig:pairs"
+        built = SC.drain_build_times()
+    finally:
+        SC.disable()
+    # the child's second lands once: in its own entry, not also the parent's
+    assert built == {"simhash_sig:32": 1.0, "simhash_pairs:32:3": 2.0}
 
 
 def test_nested_memo_builds_on_two_threads_are_timed_apart(monkeypatch):

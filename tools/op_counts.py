@@ -38,6 +38,9 @@ import uuid
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PERFBENCH = os.path.join(ROOT, "perfbench")
 FIELDS = ("wall_s", "cpu_s", "py4j_commands", "spark_jobs", "janino_compilations")
+#: The engine workloads of ``perfbench/workloads.py``; ``retry_churn``
+#: runs a request and a response op back to back.
+WORKLOADS = ("request_ingest", "response_drain", "retry_churn")
 
 
 class CommandCounter:
@@ -114,12 +117,16 @@ def medians(ops: list[dict]) -> dict:
     return {k: statistics.median(op[k] for op in ops) for k in FIELDS}
 
 
-def main(argv: list[str] | None = None) -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--workload", choices=("request_ingest", "response_drain"), required=True)
+    ap.add_argument("--workload", choices=WORKLOADS, required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--ops", type=int, default=5, help="steady ops to count")
-    args = ap.parse_args(argv)
+    return ap.parse_args(argv)
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(argv)
     if os.environ.get("PYTHONHASHSEED") != "0":
         # the string-hash order perfbench runs with
         os.environ["PYTHONHASHSEED"] = "0"
